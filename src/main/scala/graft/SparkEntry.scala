@@ -3336,10 +3336,10 @@ object SparkEntry {
       val (corpusDir, indexDir, _) = admissionState(base, dir)
       graft.streaming.Admission.admitBatch(b1, corpusDir, indexDir,
         "doc_id", "text", numHashes = 64, bands = 32, threshold = 0.6,
-        dedupWithinBatch = false, batchId = 1L, collectStats = false)
+        dedupWithinBatch = false, batchId = 1L)
       graft.streaming.Admission.admitBatch(b2, corpusDir, indexDir,
         "doc_id", "text", numHashes = 64, bands = 32, threshold = 0.6,
-        dedupWithinBatch = false, batchId = 2L, collectStats = false)
+        dedupWithinBatch = false, batchId = 2L)
       s.read.parquet(corpusDir).select(col("doc_id"))
         .orderBy(col("doc_id"))
     },
@@ -3373,10 +3373,10 @@ object SparkEntry {
         }
       graft.streaming.Admission.admitBatch(b1, corpusDir, indexDir,
         "doc_id", "text", numHashes = 64, bands = 32, threshold = 0.6,
-        dedupWithinBatch = false, batchId = 1L, collectStats = false)
+        dedupWithinBatch = false, batchId = 1L)
       graft.streaming.Admission.admitBatch(b2, corpusDir, indexDir,
         "doc_id", "text", numHashes = 64, bands = 32, threshold = 0.6,
-        dedupWithinBatch = false, batchId = 2L, collectStats = false)
+        dedupWithinBatch = false, batchId = 2L)
       s.read.parquet(corpusDir).select(col("doc_id"))
         .orderBy(col("doc_id"))
     },
@@ -3440,10 +3440,10 @@ object SparkEntry {
         .union(base.filter(col("vec_id") < 30))
       graft.streaming.Admission.admitBatchEmbedding(b1, corpusDir,
         indexDir, "vec_id", "embedding", dim = 64, threshold = 0.95,
-        dedupWithinBatch = false, batchId = 1L, collectStats = false)
+        dedupWithinBatch = false, batchId = 1L)
       graft.streaming.Admission.admitBatchEmbedding(b2, corpusDir,
         indexDir, "vec_id", "embedding", dim = 64, threshold = 0.95,
-        dedupWithinBatch = false, batchId = 2L, collectStats = false)
+        dedupWithinBatch = false, batchId = 2L)
       s.read.parquet(corpusDir).select(col("vec_id"))
         .orderBy(col("vec_id"))
     },
@@ -3480,10 +3480,10 @@ object SparkEntry {
         .union(base.filter(col("vec_id") < 30))
       graft.streaming.Admission.admitBatchEmbedding(b1, corpusDir,
         indexDir, "vec_id", "embedding", dim = 64, threshold = 0.95,
-        dedupWithinBatch = false, batchId = 1L, collectStats = false)
+        dedupWithinBatch = false, batchId = 1L)
       graft.streaming.Admission.admitBatchEmbedding(b2, corpusDir,
         indexDir, "vec_id", "embedding", dim = 64, threshold = 0.95,
-        dedupWithinBatch = false, batchId = 2L, collectStats = false)
+        dedupWithinBatch = false, batchId = 2L)
       s.read.parquet(corpusDir).select(col("vec_id"))
         .orderBy(col("vec_id"))
     },
@@ -4381,10 +4381,10 @@ object SparkEntry {
         }
       graft.streaming.Admission.admitBatchSubstring(b1, corpusDir,
         indexDir, "doc_id", "text", k = 8, maxDupCoverage = 0.5,
-        hashKeys = false, batchId = 1L, collectStats = false)
+        hashKeys = false, batchId = 1L)
       graft.streaming.Admission.admitBatchSubstring(b2, corpusDir,
         indexDir, "doc_id", "text", k = 8, maxDupCoverage = 0.5,
-        hashKeys = false, batchId = 2L, collectStats = false)
+        hashKeys = false, batchId = 2L)
       s.read.parquet(corpusDir).select(col("doc_id"))
         .orderBy(col("doc_id"))
     },
@@ -7889,7 +7889,7 @@ object SparkEntry {
       Admission.admitBatchSemantic(batch, corpusDir, indexDir,
         "vec_id", "v", centers, minCosine = 0.95,
         maxClusterSize = Int.MaxValue,
-        dedupWithinBatch = false, batchId = 1L, collectStats = false)
+        dedupWithinBatch = false, batchId = 1L)
       s.read.parquet(corpusDir).select(col("vec_id"))
         .orderBy(col("vec_id"))
     },
@@ -8347,7 +8347,7 @@ object SparkEntry {
               else fanoLines((id % 7).toInt).toSet), "ahash")
       Admission.admitBatchSignature(batch, corpusDir, indexDir,
         "media_id", "img_hash", maxDistance = 8,
-        dedupWithinBatch = true, batchId = 1L, collectStats = false)
+        dedupWithinBatch = true, batchId = 1L)
       s.read.parquet(corpusDir).select(col("media_id"))
         .orderBy(col("media_id"))
     },
@@ -8741,7 +8741,7 @@ object SparkEntry {
       Admission.admitStreamSemantic(stream, corpusDir, indexDir,
         tmp.resolve("ckpt").toString, "vec_id", "v", centers,
         minCosine = 0.95, maxClusterSize = Int.MaxValue,
-        dedupWithinBatch = false, collectStats = false)
+        dedupWithinBatch = false)
       s.read.parquet(corpusDir).select(col("vec_id"))
         .orderBy(col("vec_id"))
     },

@@ -225,9 +225,17 @@ object Dedup {
 
   private def bandedFor(s: DataFrame, numHashes: Int, bands: Int,
                         seed: Long): DataFrame =
-    s.select(col("id"),
-        explode(minhashBands(minhashSignature(col("sh"), numHashes, seed),
-          bands, numHashes / bands)).as("bb"))
+    bandRows(s, col("id"), bandKeys(col("sh"), numHashes, bands, seed))
+
+  /** a shingle array's LSH band keys: array of (band, bucket) */
+  private def bandKeys(sh: Column, numHashes: Int, bands: Int,
+                       seed: Long): Column =
+    minhashBands(minhashSignature(sh, numHashes, seed), bands,
+      numHashes / bands)
+
+  /** one (id, band, bucket) row per element of the band-key array `bb` */
+  private def bandRows(d: DataFrame, id: Column, bb: Column): DataFrame =
+    d.select(id.as("id"), explode(bb).as("bb"))
       .select(col("id"), col("bb.band").as("band"),
         col("bb.bucket").as("bucket"))
 
@@ -321,17 +329,6 @@ object Dedup {
       .withColumn("__seed", lit(seed))
       .withColumn("__maxBucketSize", lit(maxBucketSize))
 
-  /** [[minhashPairsAgainst]] with a PREBUILT corpus index (from
-    * [[minhashIndex]], typically read back from parquet): per-batch
-    * cost is the batch's own banding, one broadcast join into the
-    * index, and jaccard verification against only candidate-matched
-    * corpus rows — the corpus is scanned once (verification) and
-    * never re-banded. The index's embedded `__fmt` format version and
-    * build params are validated against this library and this call's
-    * params, and a mismatch (or an index carrying no param columns at
-    * all) throws rather than silently reducing recall; pass
-    * `acceptUnvalidated = true` to run a hand-built
-    * (band, bucket, ids) index on your own contract. */
   /** Validate an index's embedded `__`-prefixed param columns and
     * strip them. Enforced, in order:
     *  - an index with NO param columns is rejected unless the caller
@@ -348,39 +345,10 @@ object Dedup {
     *    call does not ask about (the skew cap at screen time, or
     *    params added by a future format) only need to be constant.
     * An EMPTY index (zero rows) passes vacuously: there is nothing to
-    * validate and every screen over it returns zero candidates. */
-  /** Session-scoped memo of SUCCESSFUL validations, keyed on (the
-    * index's input files, the asked param list). Only BARE file scans
-    * are cacheable — any transformation over the scan (a test's
-    * `withColumn("__seed", …)`, a union, a filter) gets None and
-    * always re-validates, so a mutated plan can never ride a cached
-    * pass. A rewritten index produces new part-file names (parquet
-    * writers never reuse names), so the key misses and the rewrite
-    * re-validates. Bounded; failures are never cached (they throw).
-    * This amortizes the per-call distinct-scan the r8 every-tuple
-    * validation added: an admission loop re-reading the same
-    * persisted index pays one validation job per (files, params), not
-    * one per update/screen call. */
-  private val validatedIndexes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(Seq[String], Seq[(String, String)])]()
-
-  /** input-file key when (and only when) the plan is a bare scan,
-    * possibly under subquery aliases */
-  private def bareScanFiles(index: DataFrame): Option[Seq[String]] = {
-    import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
-    def strip(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-    : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = p match {
-      case s: SubqueryAlias => strip(s.child)
-      case other => other
-    }
-    strip(index.queryExecution.analyzed) match {
-      case _: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        val files = index.inputFiles
-        if (files.nonEmpty) Some(files.sorted.toSeq) else None
-      case _ => None
-    }
-  }
-
+    * validate and every screen over it returns zero candidates.
+    *
+    * The tuple read is memoized per file set ([[indexParamTuple]]);
+    * the `asked` check runs on every call. */
   private[operators] def validateIndexParams(index: DataFrame, what: String,
                                   asked: Seq[(String, Any)],
                                   acceptUnvalidated: Boolean): DataFrame = {
@@ -395,28 +363,7 @@ object Dedup {
           "run a hand-built index on your own contract.")
       index
     } else {
-      val cacheKey = bareScanFiles(index)
-        .map(fs => (fs, asked.map { case (k, v) => k -> String.valueOf(v) }))
-      if (cacheKey.exists(validatedIndexes.contains))
-        return index.drop(paramCols: _*)
-      // no .limit(3) guard here: a limit over a shuffle runs the
-      // incremental try-1-then-2-then-4-partitions probe — FOUR jobs
-      // per validation at gate scale (r11 ProbeAdmit). The distinct
-      // of constant-per-build columns is bounded by the number of
-      // builds ever unioned into the file set (1 for any graft-
-      // written index), so a plain collect is one job and bytes.
-      val tuples = index.select(paramCols.map(col): _*).distinct()
-        .collect()
-      require(tuples.length <= 1,
-        s"$what: index carries ${tuples.length}+ distinct build-param " +
-          s"tuples ${tuples.map(_.toString).mkString(", ")} over " +
-          s"(${paramCols.mkString(", ")}) — it was assembled from " +
-          "differently-parameterized builds (a union of indexes?) and " +
-          "would screen with mixed-recall buckets. Rebuild from one " +
-          "parameter set.")
-      tuples.headOption.foreach { r =>
-        val built = paramCols.zipWithIndex
-          .map { case (c, i) => c -> r.get(i) }.toMap
+      indexParamTuple(index, what).foreach { built =>
         asked.foreach { case (k, v) =>
           require(built.contains(k),
             s"$what: index lacks the $k param column — it was " +
@@ -431,12 +378,91 @@ object Dedup {
               "match the batch params.")
         }
       }
-      cacheKey.foreach { k =>
-        if (validatedIndexes.size < 4096) validatedIndexes.add(k)
-      }
       index.drop(paramCols: _*)
     }
   }
+
+  /** Session-scoped memo of index param tuples, keyed on (the index's
+    * input files, its `__` column names); the value is the one tuple
+    * the files carry (None for a zero-row index). Only BARE file scans
+    * are keyed — any transformation over the scan (a test's
+    * `withColumn("__seed", …)`, a union, a filter) gets no key and is
+    * always read, so a mutated plan can never ride a memoized tuple. A
+    * rewritten index produces new part-file names (parquet writers
+    * never reuse names), so the key misses and the rewrite is read
+    * again. Bounded; a file set carrying mixed tuples is never stored
+    * (the read throws). An admission loop re-reading the same
+    * persisted index pays one tuple read per file set — and none for
+    * an index it wrote itself ([[rememberIndexParams]]). */
+  private val indexParams = new java.util.concurrent.ConcurrentHashMap[
+    (Seq[String], Seq[String]), Option[Map[String, Any]]]()
+
+  /** memo key when (and only when) the plan is a bare scan, possibly
+    * under subquery aliases */
+  private def paramKey(index: DataFrame): Option[(Seq[String], Seq[String])] = {
+    import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+    def strip(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+    : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = p match {
+      case s: SubqueryAlias => strip(s.child)
+      case other => other
+    }
+    strip(index.queryExecution.analyzed) match {
+      case _: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        val files = index.inputFiles
+        if (files.isEmpty) None
+        else Some((files.sorted.toSeq,
+          index.columns.filter(_.startsWith("__")).toSeq))
+      case _ => None
+    }
+  }
+
+  /** The one param tuple (`__` column → value) `index` carries, None
+    * when it has zero rows; throws when its rows carry more than one.
+    * Memoized per file set (see [[indexParams]]). */
+  private[operators] def indexParamTuple(index: DataFrame, what: String)
+  : Option[Map[String, Any]] = {
+    val key = paramKey(index)
+    key.flatMap(k => Option(indexParams.get(k))).getOrElse {
+      val paramCols = index.columns.filter(_.startsWith("__")).toSeq
+      // no .limit(3) guard here: a limit over a shuffle runs the
+      // incremental try-1-then-2-then-4-partitions probe — FOUR jobs
+      // per validation at gate scale. The distinct of constant-per-
+      // build columns is bounded by the number of builds ever unioned
+      // into the file set (1 for any graft-written index), so a plain
+      // collect is one job and bytes.
+      val tuples = index.select(paramCols.map(col): _*).distinct()
+        .collect()
+      require(tuples.length <= 1,
+        s"$what: index carries ${tuples.length}+ distinct build-param " +
+          s"tuples ${tuples.map(_.toString).mkString(", ")} over " +
+          s"(${paramCols.mkString(", ")}) — it was assembled from " +
+          "differently-parameterized builds (a union of indexes?) and " +
+          "would screen with mixed-recall buckets. Rebuild from one " +
+          "parameter set.")
+      val tuple = tuples.headOption.map(r =>
+        paramCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
+      key.foreach(remember(_, tuple))
+      tuple
+    }
+  }
+
+  private def remember(key: (Seq[String], Seq[String]),
+                       tuple: Option[Map[String, Any]]): Unit =
+    if (indexParams.size < 4096) indexParams.put(key, tuple)
+
+  /** Register `written` — an index the caller just wrote from `source`
+    * under `source`'s own params (every graft fold restamps the params
+    * it validated) — so its next read is a memo hit instead of a
+    * validation job. Registers nothing unless `source`'s tuple is
+    * memoized and covers every `__` column of `written`. */
+  private[graft] def rememberIndexParams(source: DataFrame,
+                                         written: DataFrame): Unit =
+    for {
+      sk <- paramKey(source)
+      tuple <- Option(indexParams.get(sk)).flatten
+      wk <- paramKey(written)
+      if wk._2.forall(tuple.contains)
+    } remember(wk, Some(tuple.filter { case (c, _) => wk._2.contains(c) }))
 
   /** the asked-param list shared by the minhash screen and update:
     * format version first (clearest failure), then the band-family
@@ -447,6 +473,18 @@ object Dedup {
     Seq("__fmt" -> MinhashIndexFormat, "__numHashes" -> numHashes,
       "__bands" -> bands, "__shingleLen" -> shingleLen, "__seed" -> seed)
 
+  /** [[minhashPairsAgainst]] with a PREBUILT corpus index (from
+    * [[minhashIndex]], typically read back from parquet): per-batch
+    * cost is the batch's own banding, one broadcast join into the
+    * index, and jaccard verification ([[verifyCandidates]]) that
+    * touches corpus text only for candidate-matched ids — the corpus
+    * is semi-joined to the candidate ids before any shingling, and
+    * never re-banded. The index's embedded `__fmt` format version and
+    * build params are validated against this library and this call's
+    * params, and a mismatch (or an index carrying no param columns at
+    * all) throws rather than silently reducing recall; pass
+    * `acceptUnvalidated = true` to run a hand-built
+    * (band, bucket, ids) index on your own contract. */
   def minhashPairsAgainstIndex(newDf: DataFrame, corpus: DataFrame,
                                corpusIndex: DataFrame,
                                idCol: String, textCol: String,
@@ -496,22 +534,35 @@ object Dedup {
       minhashAsked(numHashes, bands, shingleLen, seed) :+
         ("__maxBucketSize" -> maxBucketSize),
       acceptUnvalidated)
+    foldBandRows(old,
+      bandedFor(shingledFor(newBatch, idCol, textCol, shingleLen),
+        numHashes, bands, seed),
+      numHashes, bands, shingleLen, seed, maxBucketSize)
+  }
+
+  /** Merge per-doc band rows (id, band, bucket) into a validated,
+    * stripped minhash index in ONE aggregation ([[mergeIndex]]): each
+    * row enters as a one-member bucket, so the batch side needs no
+    * aggregation of its own. */
+  private def foldBandRows(old: DataFrame, bandRows: DataFrame,
+                           numHashes: Int, bands: Int, shingleLen: Int,
+                           seed: Long, maxBucketSize: Int): DataFrame = {
     require(old.columns.contains("n"),
       "minhashIndexUpdate requires a graft-built index carrying the " +
         "true bucket count column `n` (hand-built (band, bucket, ids) " +
         "indexes cannot distinguish a dead oversized bucket from an " +
         "absent one)")
-    val nb = bandedFor(shingledFor(newBatch, idCol, textCol, shingleLen),
-        numHashes, bands, seed)
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col("id")).as("ids"))
-      .select(col("band"), col("bucket"), col("ids"),
-        size(col("ids")).cast("long").as("n"))
     stampMinhashParams(
       mergeIndex(old.select(col("band"), col("bucket"), col("ids"), col("n")),
-        nb, Seq("band", "bucket"), maxBucketSize),
+        asBucketRows(bandRows), Seq("band", "bucket"), maxBucketSize),
       numHashes, bands, shingleLen, seed, maxBucketSize)
   }
+
+  /** (id, band, bucket) rows as one-member (band, bucket, ids, n)
+    * buckets, the shape [[mergeIndex]] folds */
+  private def asBucketRows(bandRows: DataFrame): DataFrame =
+    bandRows.select(col("band"), col("bucket"),
+      array(col("id")).as("ids"), lit(1L).as("n"))
 
   /** union + re-aggregate two capped bucket tables on `keys`: member
     * lists concatenate, TRUE counts add, and the cap re-applies on the
@@ -757,22 +808,30 @@ object Dedup {
                                     numParts: Int = 0,
                                     acceptUnvalidated: Boolean = false,
                                     preRead: Option[DataFrame] = None)
-  : PartialUpdateStats = {
-    val nb = bandedFor(shingledFor(newBatch, idCol, textCol, shingleLen),
-        numHashes, bands, seed)
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col("id")).as("ids"))
-      .select(col("band"), col("bucket"), col("ids"),
-        size(col("ids")).cast("long").as("n"))
+  : PartialUpdateStats =
+    foldBandRowsPartitioned(spark, path,
+      bandedFor(shingledFor(newBatch, idCol, textCol, shingleLen),
+        numHashes, bands, seed),
+      numHashes, bands, shingleLen, seed, maxBucketSize, numParts,
+      acceptUnvalidated, preRead)
+
+  /** [[foldBandRows]]'s in-place twin over a partitioned layout */
+  private def foldBandRowsPartitioned(spark: org.apache.spark.sql.SparkSession,
+                                      path: String, bandRows: DataFrame,
+                                      numHashes: Int, bands: Int,
+                                      shingleLen: Int, seed: Long,
+                                      maxBucketSize: Int, numParts: Int,
+                                      acceptUnvalidated: Boolean,
+                                      preRead: Option[DataFrame])
+  : PartialUpdateStats =
     partitionedUpdateCore(spark, path, "minhashIndexUpdatePartitioned",
       minhashAsked(numHashes, bands, shingleLen, seed) :+
         ("__maxBucketSize" -> maxBucketSize),
-      Seq("band", "bucket"), nb, maxBucketSize, numParts,
-      acceptUnvalidated,
+      Seq("band", "bucket"), asBucketRows(bandRows), maxBucketSize,
+      numParts, acceptUnvalidated,
       stampMinhashParams(_, numHashes, bands, shingleLen, seed,
         maxBucketSize),
       preRead)
-  }
 
   /** [[minhashIndexUpdatePartitioned]]'s embedding sibling. */
   def embeddingIndexUpdatePartitioned(
@@ -804,32 +863,135 @@ object Dedup {
                                  shingleLen: Int, threshold: Double,
                                  seed: Long,
                                  broadcastNew: Boolean): DataFrame = {
+    def small(d: DataFrame) = if (broadcastNew) broadcast(d) else d
     val newSh =
       shingledSpread(newDf, idCol, textCol, shingleLen).cache()
     val newBands = bandedFor(newSh, numHashes, bands, seed)
       .select(col("id").as("id_new"), col("band"), col("bucket"))
     val cand = corpusIndex
-      .join(if (broadcastNew) broadcast(newBands) else newBands,
-        Seq("band", "bucket"))
+      .join(small(newBands), Seq("band", "bucket"))
       .select(col("id_new"), explode(col("ids")).as("id_corpus"))
       .distinct()
-    val verified = cand
-      .join(newSh.select(col("id").as("id_new"), col("sh").as("sh_new")),
-        Seq("id_new"))
-      // r18 opt (guide §2.5): the verification shingling of the
-      // corpus side ran serialized on a 1-3-partition corpus scan.
-      // r19 (ADVICE r18): the spread now sits BELOW the shingle
-      // projection (shingledSpread), so the shingling itself — not
-      // just the downstream jaccard join — runs at session
-      // parallelism; no-op on already-wide scans.
-      .join(shingledSpread(corpus, idCol, textCol, shingleLen)
-        .select(col("id").as("id_corpus"), col("sh").as("sh_cor")),
-        Seq("id_corpus"))
+    // the candidate corpus ids are batch-bounded, like the batch side
+    val candIds = cand.select(col("id_corpus").as(idCol)).distinct()
+    val verified = verifyCandidates(
+      cand.join(newSh.select(col("id").as("id_new"), col("sh").as("sh_new")),
+        Seq("id_new")),
+      corpus.select(col(idCol), col(textCol))
+        .join(small(candIds), Seq(idCol), "left_semi"),
+      idCol, textCol, shingleLen, threshold, broadcastNew)
+    materializeAndRelease(verified, newSh)
+  }
+
+  /** Exact-jaccard verification shared by the MinHash screens against
+    * a corpus. `cand` holds candidate (id_new, id_corpus) pairs with
+    * the new side's shingles `sh_new`; `corpusCand` is the corpus
+    * ALREADY restricted to the candidate ids (a semi join, or the
+    * admission cycle's id probe), so corpus text is shingled only for
+    * candidate rows — never whole, never spread, never broadcast.
+    * Returns (id_new, id_corpus, jaccard >= threshold). */
+  private def verifyCandidates(cand: DataFrame, corpusCand: DataFrame,
+                               idCol: String, textCol: String,
+                               shingleLen: Int, threshold: Double,
+                               broadcastCand: Boolean): DataFrame =
+    shingledFor(corpusCand, idCol, textCol, shingleLen)
+      .select(col("id").as("id_corpus"), col("sh").as("sh_cor"))
+      .join(if (broadcastCand) broadcast(cand) else cand, Seq("id_corpus"))
       .select(col("id_new"), col("id_corpus"),
         jaccard(col("sh_new"), col("sh_cor")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    materializeAndRelease(verified, newSh)
+
+  // ---- MinHash over a settled batch (graft.streaming.Admission) --------
+
+  /** The features the admission cycle's settle scan computes with the
+    * batch: `__sh`, the word shingles, and `__bb`, the band keys
+    * (array of (band, bucket); null for a doc without shingles, which
+    * bands nowhere — the [[shingledFor]] filter). */
+  private[graft] def minhashFeatures(batch: DataFrame, textCol: String,
+                                     numHashes: Int, bands: Int,
+                                     shingleLen: Int, seed: Long): DataFrame =
+    batch.withColumn("__sh", wordShingles(col(textCol), shingleLen))
+      .withColumn("__bb", when(size(col("__sh")) > 0,
+        bandKeys(col("__sh"), numHashes, bands, seed)))
+
+  /** [[minhashPairsAgainstIndex]] over settled rows carrying
+    * [[minhashFeatures]]: the ids of `rows` that near-dup the corpus.
+    * `idx` is the validated, stripped index. One index scan returns
+    * the buckets the rows' band keys touch (filtered on the bucket
+    * value, matched to (band, bucket) on the driver); the candidate
+    * pairs form on the driver; [[verifyCandidates]] then reads only
+    * the candidate corpus rows, through an id IN-list that parquet
+    * pushdown (and bucket pruning on a corpus bucketed by id) narrows
+    * before any text is read. */
+  private[graft] def minhashMatchesSettled(rows: Seq[org.apache.spark.sql.Row],
+                                           corpus: DataFrame, idx: DataFrame,
+                                           idCol: String, textCol: String,
+                                           shingleLen: Int,
+                                           threshold: Double): Set[Any] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{ArrayType, StringType, StructField,
+      StructType}
+    def keysOf(r: Row): Seq[(Int, Long)] = {
+      val i = r.fieldIndex("__bb")
+      if (r.isNullAt(i)) Nil
+      else r.getSeq[Row](i).map(b => (b.getInt(0), b.getLong(1)))
+    }
+    val buckets = rows.flatMap(keysOf).map(_._2).distinct
+    if (buckets.isEmpty) return Set.empty
+    val hit = idx.filter(col("bucket").isin(buckets: _*))
+      .select(col("band"), col("bucket"), col("ids")).collect()
+      .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Any](2)).toMap
+    val pairs = rows.flatMap { r =>
+      keysOf(r).flatMap(hit.getOrElse(_, Nil)).distinct
+        .map(c => Row(r.getAs[Any](idCol), c,
+          r.getSeq[String](r.fieldIndex("__sh"))))
+    }
+    if (pairs.isEmpty) return Set.empty
+    val spark = corpus.sparkSession
+    val cand = spark.createDataFrame(java.util.Arrays.asList(pairs: _*),
+      StructType(Seq(
+        StructField("id_new", rows.head.schema(idCol).dataType),
+        StructField("id_corpus",
+          idx.schema("ids").dataType.asInstanceOf[ArrayType].elementType),
+        StructField("sh_new", ArrayType(StringType)))))
+    verifyCandidates(cand,
+      corpus.select(col(idCol), col(textCol))
+        .filter(col(idCol).isin(pairs.map(_.get(1)).distinct: _*)),
+      idCol, textCol, shingleLen, threshold, broadcastCand = true)
+      .select(col("id_new")).collect().map(_.get(0)).toSet
   }
+
+  /** The admission cycle's MinHash fold: merge the admitted rows'
+    * settled band keys (`__bb`) into `idx` (validated, stripped) —
+    * the admitted docs are never re-shingled. */
+  private[graft] def minhashFoldSettled(idx: DataFrame, admitted: DataFrame,
+                                        idCol: String, numHashes: Int,
+                                        bands: Int, shingleLen: Int,
+                                        seed: Long,
+                                        maxBucketSize: Int): DataFrame =
+    foldBandRows(idx, bandRows(admitted, col(idCol), col("__bb")),
+      numHashes, bands, shingleLen, seed, maxBucketSize)
+
+  /** [[minhashFoldSettled]] in place, on a partitioned layout */
+  private[graft] def minhashFoldSettledPartitioned(
+      path: String, admitted: DataFrame, idCol: String, numHashes: Int,
+      bands: Int, shingleLen: Int, seed: Long, maxBucketSize: Int,
+      preRead: DataFrame): PartialUpdateStats =
+    foldBandRowsPartitioned(admitted.sparkSession, path,
+      bandRows(admitted, col(idCol), col("__bb")), numHashes, bands,
+      shingleLen, seed, maxBucketSize, numParts = 0,
+      acceptUnvalidated = false, Some(preRead))
+
+  /** [[validateIndexParams]] for a minhash index against one cycle's
+    * params, the skew cap included (the fold re-applies it) */
+  private[graft] def validateMinhashIndex(index: DataFrame, what: String,
+                                          numHashes: Int, bands: Int,
+                                          shingleLen: Int, seed: Long,
+                                          maxBucketSize: Int): DataFrame =
+    validateIndexParams(index, what,
+      minhashAsked(numHashes, bands, shingleLen, seed) :+
+        ("__maxBucketSize" -> maxBucketSize),
+      acceptUnvalidated = false)
 
   /** Incremental near-dup matching: (new, corpus) pairs by MinHash
     * LSH between a NEW batch and an EXISTING corpus, verified by

@@ -619,24 +619,20 @@ object SemDedup {
     require(missing.isEmpty,
       s"not a SemDedup assignment index: missing columns $missing — " +
         s"rebuild with SemDedup.assignmentIndex (v$AssignIndexFormat)")
-    // distinct over four RLE-constant columns — one cheap aggregate
-    val stamps = index.select(col("__fmt"), col("__k"), col("__dim"),
-      col("__digest")).distinct().collect()
-    require(stamps.length <= 1,
-      s"assignment index stamps not constant (${stamps.length} " +
-        "distinct tuples) — the file mixes builds under different " +
-        "centers or formats; rebuild with SemDedup.assignmentIndex")
-    stamps.headOption.foreach { h =>
-      require(h.getInt(0) == AssignIndexFormat,
-        s"assignment index format ${h.getInt(0)} does not match this " +
+    // the one stamp tuple (distinct over RLE-constant columns, one
+    // cheap aggregate; memoized per file set — throws on mixed builds)
+    Dedup.indexParamTuple(index, "SemDedup assignment index")
+        .foreach { h =>
+      require(h("__fmt") == AssignIndexFormat,
+        s"assignment index format ${h("__fmt")} does not match this " +
           s"library's v$AssignIndexFormat — rebuild (an incompatible " +
           "layout would screen WRONG, not just miss)")
-      require(h.getInt(1) == centers.length &&
-        h.getInt(2) == centers.head.length &&
-        h.getString(3) == centersDigest(centers),
+      require(h("__k") == centers.length &&
+        h("__dim") == centers.head.length &&
+        h("__digest") == centersDigest(centers),
         s"assignment index was built under a DIFFERENT center table " +
-          s"(k=${h.getInt(1)}, dim=${h.getInt(2)}, digest=" +
-          s"${h.getString(3).take(8)}…) than the caller's " +
+          s"(k=${h("__k")}, dim=${h("__dim")}, digest=" +
+          s"${h("__digest").toString.take(8)}…) than the caller's " +
           s"(k=${centers.length}, dim=${centers.head.length}, digest=" +
           s"${centersDigest(centers).take(8)}…) — screening would be " +
           "silently wrong; rebuild the index or load the matching " +

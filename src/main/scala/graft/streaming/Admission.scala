@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Dedup
 
 /** The streaming ADMISSION LOOP — the production shape that the
@@ -22,38 +24,52 @@ import graft.operators.Dedup
   * Streaming's foreachBatch + the batch screen operators.
   *
   * Per batch, in order:
-  *   1. one row per id within the batch, then the EXACT ID screen
-  *      against the corpus ([[Dedup.exactAgainst]]). This is also
-  *      what makes a foreachBatch REPLAY a no-op: foreachBatch is
+  *   0. SETTLE the batch: one scan collects it to the driver together
+  *      with the space's batch features (for MinHash its shingles and
+  *      band keys). Every later step reads these driver-held rows —
+  *      as plain rows, or as a local relation — so the batch source
+  *      is read exactly once and every count is a row count.
+  *   1. one row per id within the batch, then the EXACT ID screen:
+  *      one corpus id probe (an IN-list of the batch's ids). This is
+  *      also what makes a foreachBatch REPLAY a no-op: foreachBatch is
   *      at-least-once, and rows already appended by a half-finished
   *      run carry ids the corpus now contains, so they drop here.
-  *   2. near-dup screen against the PERSISTED index
-  *      ([[Dedup.minhashPairsAgainstIndex]] — batch-bounded banding,
-  *      one corpus scan for jaccard verification).
+  *   2. near-dup screen against the PERSISTED index. MinHash: one
+  *      index scan probes the buckets of the settled band keys, then
+  *      jaccard verification reads only the candidate corpus rows
+  *      (the [[Dedup.minhashPairsAgainstIndex]] verification).
   *   3. optional within-batch near-dedup among the survivors
   *      ([[Dedup.minhashDedup]], batch-bounded). Corpus-screen FIRST:
   *      if batch doc B's only near-dup partner A was itself dropped
   *      by the corpus screen, B is still admitted — within-first
   *      would have dropped B in favor of A and then lost A too.
   *   4. append the admitted rows to the corpus, then fold them into
-  *      the index ([[Dedup.minhashIndexUpdate]]) via a staged
-  *      write-and-swap (parquet has no transactional overwrite).
+  *      the index via a staged write-and-swap (parquet has no
+  *      transactional overwrite). The MinHash fold merges the settled
+  *      band keys of the admitted docs; it never re-shingles them.
+  *
+  * Batch contract: the batch must fit a broadcast. It always had to —
+  * the id screen broadcast its keys and the near-dup screen its
+  * shingles and band keys — so settling it on the driver moves no
+  * more bytes through the driver than those broadcasts did. Corpus
+  * and index stay distributed scans.
   *
   * Crash-safety contract (single writer assumed): the admitted set is
-  * localCheckpoint-ed BEFORE either write, so step 4's two writes
-  * never recompute against files they are mutating. A crash BETWEEN
-  * the corpus append and the index swap leaves rows the index does
-  * not cover: replaying the batch is safe (step 1 drops the appended
-  * rows — no duplicates, ever) but those rows stay invisible to
-  * FUTURE near-dup screens until an index rebuild
-  * ([[Dedup.minhashIndex]], cost measured in BENCH_NOTES). At real
-  * deployment scale the two writes belong in one transactional-table
-  * commit (Iceberg/Delta); with raw parquet the append-then-swap
-  * order above is the one whose failure mode degrades recall rather
-  * than corrupting the corpus.
+  * settled on the DRIVER (the admitted rows, held as a local
+  * relation) BEFORE either write, so step 4's two writes never
+  * recompute against files they are mutating. A crash BETWEEN the
+  * corpus append and the index swap leaves rows the index does not
+  * cover: replaying the batch is safe (step 1 drops the appended rows
+  * — no duplicates, ever) but those rows stay invisible to FUTURE
+  * near-dup screens until an index rebuild ([[Dedup.minhashIndex]],
+  * cost measured in BENCH_NOTES); spec-pinned with an injected
+  * failure in AdmissionSpec. At real deployment scale the two writes
+  * belong in one transactional-table commit (Iceberg/Delta); with raw
+  * parquet the append-then-swap order above is the one whose failure
+  * mode degrades recall rather than corrupting the corpus.
   *
   * At 100 TB: the batch (not the corpus) bounds every screening
-  * SHUFFLE; the index rewrite is the only corpus-proportional write
+  * step; the index rewrite is the only corpus-proportional write
   * and is ids-only — and if the index was persisted with
   * [[Dedup.indexWritePartitioned]], the cycle detects the layout and
   * folds IN PLACE ([[Dedup.minhashIndexUpdatePartitioned]]), writing
@@ -61,24 +77,20 @@ import graft.operators.Dedup
   * corpus-proportional WRITE becomes batch-bounded too (measured in
   * ScaleSmoke `upd`; crash contract on [[admitCore]]).
   *
-  * Cost model at scale — what IS corpus-proportional: each cycle
-  * READS the corpus twice (the id-screen semi join and the near-dup
-  * jaccard/cosine verification join; neither shuffles it, both scan
-  * it). At gate scale that is noise (ScaleSmoke `adm` measures flat
-  * cycles); at 100 TB it is the dominant term, and the mitigations
-  * are storage-layout ones: bucket the corpus by `idCol` — the id
-  * screen joins on the raw id (hashKeys = false), so a bucketed
-  * corpus joins with ZERO corpus-side exchange and an IN-list id
-  * probe prunes buckets (both measured: ScaleSmoke `bkt`,
-  * SelectedBucketsCount 17/64 for a 20-id probe, corpus never
-  * shuffled) — or keep a distilled ids-only keys table beside the
-  * index and screen ids against that instead of the corpus. The keys-table variant is deliberately NOT built
-  * in: screening ids against the corpus itself is what makes a
-  * replayed half-finished batch exactly idempotent, and a separate
-  * keys artifact re-opens that window (keys-before-corpus crash =
-  * lost doc; corpus-before-keys crash = duplicate on replay). Choose
-  * it only on a transactional table format where corpus + keys +
-  * index commit atomically.
+  * Cost model at scale: each cycle runs ONE corpus id probe (the
+  * batch's ids as an IN-list: parquet pushdown prunes row groups, and
+  * a corpus bucketed by `idCol` prunes buckets) and a candidate-only
+  * verification (MinHash: the corpus rows of the candidate ids, read
+  * through the same kind of id IN-list; the corpus is never shingled
+  * whole). The index is read once by the screen and once by the
+  * fold; the index rewrite is the only corpus-proportional work. A
+  * distilled ids-only keys table beside the index, screened instead
+  * of the corpus, is deliberately NOT built in: screening ids against
+  * the corpus itself is what makes a replayed half-finished batch
+  * exactly idempotent, and a separate keys artifact re-opens that
+  * window (keys-before-corpus crash = lost doc; corpus-before-keys
+  * crash = duplicate on replay). Choose it only on a transactional
+  * table format where corpus + keys + index commit atomically.
   *
   * [[admitBatchEmbedding]] / [[admitStreamEmbedding]] are the
   * embedding-space siblings: identical skeleton and contracts, with
@@ -89,26 +101,51 @@ object Admission {
 
   /** per-batch admission telemetry: rows in the arriving batch, rows
     * surviving the exact id screen, rows admitted after all screens
-    * (== rows appended to the corpus and folded into the index).
-    * `batchRows` is -1 when the cycle ran with `collectStats = false`
-    * (it costs one extra Spark job); `afterIdScreen` and `admitted`
-    * are always real — the former's count is the cycle's cache-
-    * materialization barrier (see admitCore), the latter gates the
-    * writes. */
+    * (== rows appended to the corpus and folded into the index). All
+    * three are row counts of the settled batch — no count job. */
   case class AdmitStats(batchId: Long, batchRows: Long, afterIdScreen: Long,
                         admitted: Long)
 
-  /** The shared cycle skeleton: id screen → near screen → optional
-    * within-batch dedup → localCheckpoint → corpus append + index
-    * fold. `screen` returns the matched-id column for the near
-    * screen; `within` dedups the surviving batch against itself;
-    * `fold` merges the admitted rows into the index (full-swap
-    * durable write); `foldInPlace` is the partitioned alternative,
-    * used automatically when `indexPath` holds an
-    * [[Dedup.indexWritePartitioned]] layout (detected by its `part`
-    * column) — only the layout partitions the batch touches are
-    * rewritten, so the per-cycle index write is batch-bounded instead
-    * of corpus-proportional.
+  /** Driver-held rows of the settled batch, and the same rows as a
+    * local relation: plans over it never re-read the batch source. */
+  private[graft] final case class Settled(rows: Seq[Row], df: DataFrame)
+
+  /** One admission space's hooks into [[admitCore]]. Batch-side frames
+    * are local relations over the settled batch: its own columns plus
+    * the space's `features`.
+    *   - `validate`: the index frame `screen` and `fold` receive
+    *     (MinHash validates and strips it once per cycle; the other
+    *     spaces validate inside their screens and folds)
+    *   - `features`: columns the settle scan computes with the batch
+    *   - `screen`: (fresh, corpus, index) → the fresh ids that near-dup
+    *     the corpus
+    *   - `dedupWithin`: the within-batch stage over the screened rows
+    *   - `fold`: (index, admitted) → the whole index, swap-written
+    *   - `foldInPlace`: (path, admitted, raw index) — used when
+    *     `forceInPlace` is set or `indexPath` holds an
+    *     [[Dedup.indexWritePartitioned]] layout (detected by its `part`
+    *     column): only the layout partitions the batch touches are
+    *     rewritten, so the per-cycle index write is batch-bounded
+    *   - `refuseInPlace`: (what, why) for a space without an in-place
+    *     fold — the partitioned layout is refused before any write. */
+  private[graft] final case class Space(
+      screen: (Settled, DataFrame, DataFrame) => Set[Any],
+      dedupWithin: DataFrame => DataFrame,
+      fold: (DataFrame, DataFrame) => DataFrame,
+      foldInPlace: (String, DataFrame, DataFrame) => Unit,
+      validate: DataFrame => DataFrame = identity,
+      features: DataFrame => DataFrame = identity,
+      forceInPlace: Boolean = false,
+      refuseInPlace: Option[(String, String)] = None)
+
+  /** the `id_new` values of a screen's pair frame */
+  private def matchedIds(pairs: DataFrame): Set[Any] =
+    pairs.select(col("id_new")).collect().map(_.get(0)).toSet
+
+  /** The shared cycle: settle → id probe → near screen → optional
+    * within-batch dedup → corpus append + index fold. `beforeFold`
+    * runs between the corpus append and the index fold (the crash
+    * window of the contract above; a spec injects its failure there).
     *
     * Crash contract of the in-place fold (vs the swap's atomic
     * rename): dynamic partition overwrite commits per partition, so a
@@ -118,78 +155,102 @@ object Admission {
     * recall (batch docs invisible to SOME future band/code probes
     * until an index rebuild), the same degrade-recall-never-corrupt
     * class as the swap's append-then-crash window; a replay is still
-    * a no-op (the id screen) and does NOT repair the partial fold. */
-  /** Layout refusal BEFORE any write (review r13, shared by the
-    * semantic and signature spaces): admitCore dispatches to
-    * foldInPlace only AFTER the corpus append — an error raised
-    * there would leave the corpus mutated with the index unfolded.
-    * The layout is knowable from the schema of the cycle's own index
-    * read, so the unsupported case refuses write-free. (r18 opt:
-    * this check used to be a separate pre-read of the index path —
-    * one extra parquet listing/footer read per cycle; it now rides
-    * the index frame admitCore reads anyway, same refusal point:
-    * before any count, screen, or write.) */
-  private def admitCore(batch: DataFrame, corpusPath: String,
-                        indexPath: String, idCol: String, batchId: Long,
-                        within: Boolean, collectStats: Boolean,
-                        screen: (DataFrame, DataFrame, DataFrame) => DataFrame,
-                        dedupWithin: DataFrame => DataFrame,
-                        fold: (DataFrame, DataFrame) => DataFrame,
-                        foldInPlace: (String, DataFrame, DataFrame) => Unit,
-                        forceInPlace: Boolean = false,
-                        refuseInPlace: Option[(String, String)] = None)
+    * a no-op (the id screen) and does NOT repair the partial fold.
+    *
+    * Layout refusal BEFORE any write: the dispatch to `foldInPlace`
+    * happens only AFTER the corpus append, so an unsupported layout is
+    * refused from the schema of the cycle's own index read, before
+    * any screen or write. */
+  private[graft] def admitCore(batch: DataFrame, corpusPath: String,
+                               indexPath: String, idCol: String,
+                               batchId: Long, within: Boolean, space: Space,
+                               beforeFold: () => Unit = () => ())
   : AdmitStats = {
     val spark = batch.sparkSession
     val corpus = spark.read.parquet(corpusPath)
     val index = spark.read.parquet(indexPath)
-    refuseInPlace.foreach { case (what, why) =>
+    space.refuseInPlace.foreach { case (what, why) =>
       require(!index.columns.contains("part"),
         s"$what does not support the partitioned in-place layout — " +
           s"persist it swap-written ($why, the swap rewrite is cheap " +
           "by construction)")
     }
-    val batchRows = if (collectStats) batch.count() else -1L
-    // direct-key id screen (hashKeys = false): the join key is the id
-    // column itself, so a corpus BUCKETED by idCol — the cost-model
-    // mitigation for the per-cycle corpus scans — joins with zero
-    // corpus-side exchange (ScaleSmoke `bkt`). Ids are non-null by
-    // the id-namespace contract; a null id would bypass this screen.
-    val fresh = Dedup.exactAgainst(batch.dropDuplicates(idCol), corpus,
-      Seq(idCol), hashKeys = false).cache()
-    // materialize the cache BEFORE the screen fans out over it —
-    // unconditionally, not just under collectStats. `fresh` feeds
-    // three plan branches (the near screen's banding, its
-    // verification join, and the final left_anti), and an UNFILLED
-    // cache makes each branch recompute the id screen, re-scanning
-    // the CORPUS once per branch — at 100 TB that triples the
-    // cycle's dominant cost (r15 ProbeQ123c: streaming
-    // numInputRows showed the batch source read twice per cycle
-    // with collectStats = false). One batch-bounded count job buys
-    // corpus-scan-once; afterIdScreen is therefore always real now.
-    val nFresh = fresh.count()
-    val matched = screen(fresh, corpus, index)
-      .select(col("id_new").as(idCol)).distinct()
-    val screened = fresh.join(matched, Seq(idCol), "left_anti")
-    val surviving = if (within) dedupWithin(screened) else screened
-    // eager lineage cut: the writes below mutate this plan's inputs,
-    // so the admitted set must be physically settled first
-    val admitted = surviving.localCheckpoint()
-    val nAdmitted = admitted.count()
-    if (nAdmitted > 0) {
-      admitted.write.mode("append").parquet(corpusPath)
+    val idx = space.validate(index)
+    val featured = space.features(batch)
+    val arrived = featured.collect().toSeq
+    def settle(rows: Seq[Row]) = Settled(rows,
+      spark.createDataFrame(rows.asJava, featured.schema))
+    def idOf(r: Row): Any = r.getAs[Any](idCol)
+    // one corpus id probe: ids are non-null by the id-namespace
+    // contract; a null id never matches and bypasses this screen
+    val unique = arrived.distinctBy(idOf)
+    val ids = unique.map(idOf).filter(_ != null)
+    val stored =
+      if (ids.isEmpty) Set.empty[Any]
+      else corpus.select(col(idCol)).filter(col(idCol).isin(ids: _*))
+        .collect().map(_.get(0)).toSet
+    val fresh = unique.filterNot(r => stored.contains(idOf(r)))
+    val matched = space.screen(settle(fresh), corpus, idx)
+    val screened = fresh.filterNot(r => matched.contains(idOf(r)))
+    val admitted =
+      if (!within || screened.isEmpty) screened
+      else {
+        val keep = space.dedupWithin(settle(screened).df)
+          .select(col(idCol)).collect().map(_.get(0)).toSet
+        screened.filter(r => keep.contains(idOf(r)))
+      }
+    if (admitted.nonEmpty) {
+      // the driver-held rows are the barrier: neither write below can
+      // recompute against the files it mutates
+      val rows = settle(admitted).df
+      rows.drop(featured.columns.diff(batch.columns): _*).coalesce(1)
+        .write.mode("append").parquet(corpusPath)
+      beforeFold()
       // the cycle's own index frame rides along: no writer touched
       // indexPath since it was read (single-writer contract, and the
       // corpus append above writes corpusPath, not the index), so the
-      // fold can reuse its file listing instead of re-listing — above
-      // the parallel-discovery threshold a fresh read of a partitioned
-      // layout costs a numParts-task job (r12 ProbeQ129)
-      if (forceInPlace || index.columns.contains("part"))
-        foldInPlace(indexPath, admitted, index)
-      else swapWrite(fold(index, admitted), indexPath)
+      // in-place fold can reuse its file listing instead of re-listing
+      // — above the parallel-discovery threshold a fresh read of a
+      // partitioned layout costs a numParts-task job
+      if (space.forceInPlace || index.columns.contains("part"))
+        space.foldInPlace(indexPath, rows, index)
+      else {
+        val folded = space.fold(idx, rows)
+        swapWrite(folded, indexPath)
+        // the fold restamped the params validated this cycle: register
+        // the new files so the next cycle's validation is a memo hit
+        // (read with the known schema — no footer job)
+        Dedup.rememberIndexParams(index,
+          spark.read.schema(folded.schema).parquet(indexPath))
+      }
     }
-    fresh.unpersist()
-    AdmitStats(batchId, batchRows, nFresh, nAdmitted)
+    AdmitStats(batchId, arrived.size, fresh.size, admitted.size)
   }
+
+  /** The MinHash admission space (see [[admitBatch]]). */
+  private[graft] def minhashSpace(idCol: String, textCol: String,
+                                  numHashes: Int, bands: Int,
+                                  shingleLen: Int, seed: Long,
+                                  maxBucketSize: Int,
+                                  threshold: Double): Space =
+    Space(
+      validate = index => Dedup.validateMinhashIndex(index, "admitBatch",
+        numHashes, bands, shingleLen, seed, maxBucketSize),
+      features = batch => Dedup.minhashFeatures(batch, textCol, numHashes,
+        bands, shingleLen, seed),
+      screen = (fresh, corpus, idx) => Dedup.minhashMatchesSettled(
+        fresh.rows, corpus, idx, idCol, textCol, shingleLen, threshold),
+      dedupWithin = screened =>
+        Dedup.minhashDedup(screened, idCol, textCol,
+          numHashes = numHashes, bands = bands, shingleLen = shingleLen,
+          threshold = threshold),
+      fold = (idx, admitted) => Dedup.minhashFoldSettled(idx, admitted,
+        idCol, numHashes, bands, shingleLen, seed, maxBucketSize),
+      foldInPlace = (path, admitted, index) => {
+        Dedup.minhashFoldSettledPartitioned(path, admitted, idCol,
+          numHashes, bands, shingleLen, seed, maxBucketSize, index)
+        ()
+      })
 
   /** One admission cycle against the durable state at
     * (`corpusPath`, `indexPath`). `indexPath` must hold a
@@ -197,36 +258,19 @@ object Admission {
     * or persisted partitioned via [[Dedup.indexWritePartitioned]]
     * (auto-detected; the fold then rewrites only dirty layout
     * partitions); its embedded format version and build params are
-    * validated against this call's (mismatch throws rather than
-    * silently losing recall). Callable directly at batch cadence or
-    * per micro-batch via [[admitStream]]. */
+    * validated against this call's before any work (mismatch throws
+    * rather than silently losing recall). Callable directly at batch
+    * cadence or per micro-batch via [[admitStream]]. */
   def admitBatch(batch: DataFrame, corpusPath: String, indexPath: String,
                  idCol: String, textCol: String,
                  numHashes: Int = 64, bands: Int = 16,
                  shingleLen: Int = 3, seed: Long = 42L,
                  maxBucketSize: Int = 1000, threshold: Double = 0.8,
                  dedupWithinBatch: Boolean = true,
-                 batchId: Long = -1L,
-                 collectStats: Boolean = true): AdmitStats =
+                 batchId: Long = -1L): AdmitStats =
     admitCore(batch, corpusPath, indexPath, idCol, batchId,
-      dedupWithinBatch, collectStats,
-      screen = (fresh, corpus, index) =>
-        Dedup.minhashPairsAgainstIndex(fresh, corpus, index,
-          idCol, textCol, numHashes = numHashes, bands = bands,
-          shingleLen = shingleLen, threshold = threshold, seed = seed),
-      dedupWithin = screened =>
-        Dedup.minhashDedup(screened, idCol, textCol,
-          numHashes = numHashes, bands = bands, shingleLen = shingleLen,
-          threshold = threshold),
-      fold = (index, admitted) =>
-        Dedup.minhashIndexUpdate(index, admitted, idCol, textCol,
-          numHashes = numHashes, bands = bands, shingleLen = shingleLen,
-          seed = seed, maxBucketSize = maxBucketSize),
-      foldInPlace = (path, admitted, idx) =>
-        Dedup.minhashIndexUpdatePartitioned(admitted.sparkSession, path,
-          admitted, idCol, textCol, numHashes = numHashes, bands = bands,
-          shingleLen = shingleLen, seed = seed,
-          maxBucketSize = maxBucketSize, preRead = Some(idx)))
+      dedupWithinBatch, minhashSpace(idCol, textCol, numHashes, bands,
+        shingleLen, seed, maxBucketSize, threshold))
 
   /** [[admitBatch]]'s embedding sibling: same skeleton, with the
     * semantic screen ([[Dedup.embeddingPairsAgainstIndex]] over a
@@ -240,14 +284,13 @@ object Admission {
                           maxBucketSize: Int = 10000,
                           threshold: Double = 0.95,
                           dedupWithinBatch: Boolean = true,
-                          batchId: Long = -1L,
-                          collectStats: Boolean = true): AdmitStats =
+                          batchId: Long = -1L): AdmitStats =
     admitCore(batch, corpusPath, indexPath, idCol, batchId,
-      dedupWithinBatch, collectStats,
-      screen = (fresh, corpus, index) =>
-        Dedup.embeddingPairsAgainstIndex(fresh, corpus, index,
+      dedupWithinBatch, Space(
+      screen = (fresh, corpus, index) => matchedIds(
+        Dedup.embeddingPairsAgainstIndex(fresh.df, corpus, index,
           idCol, vecCol, dim, threshold = threshold, nTables = nTables,
-          bitsPerTable = bitsPerTable, seed = seed),
+          bitsPerTable = bitsPerTable, seed = seed)),
       dedupWithin = screened => {
         val pairs = Dedup.embeddingPairs(screened, idCol, vecCol, dim,
             threshold = threshold, nTables = nTables,
@@ -267,7 +310,7 @@ object Admission {
         Dedup.embeddingIndexUpdatePartitioned(admitted.sparkSession, path,
           admitted, idCol, vecCol, dim, nTables = nTables,
           bitsPerTable = bitsPerTable, seed = seed,
-          maxBucketSize = maxBucketSize, preRead = Some(idx)))
+          maxBucketSize = maxBucketSize, preRead = Some(idx))))
 
   /** [[admitBatch]]'s SEMANTIC sibling (r13): the near screen is
     * cluster-blocked cosine against a persisted
@@ -291,15 +334,14 @@ object Admission {
                          minCosine: Double = 0.95,
                          maxClusterSize: Int = 10000,
                          dedupWithinBatch: Boolean = true,
-                         batchId: Long = -1L,
-                         collectStats: Boolean = true): AdmitStats = {
+                         batchId: Long = -1L): AdmitStats = {
     admitCore(batch, corpusPath, indexPath, idCol, batchId,
-      dedupWithinBatch, collectStats,
+      dedupWithinBatch, Space(
       refuseInPlace = Some(("the SemDedup assignment index",
         "ids-only")),
-      screen = (fresh, corpus, index) =>
-        graft.operators.SemDedup.screenPairsIndexed(fresh, corpus,
-          index, idCol, vecCol, centers, minCosine, maxClusterSize),
+      screen = (fresh, corpus, index) => matchedIds(
+        graft.operators.SemDedup.screenPairsIndexed(fresh.df, corpus,
+          index, idCol, vecCol, centers, minCosine, maxClusterSize)),
       dedupWithin = screened =>
         graft.operators.SemDedup.semDedup(screened, idCol, vecCol,
           centers, minCosine, maxClusterSize, keep = "min_id"),
@@ -311,7 +353,7 @@ object Admission {
         graft.operators.SemDedup.assignmentIndex(admitted, idCol,
           vecCol, centers)),
       foldInPlace = (_, _, _) => sys.error(
-        "unreachable: the partitioned layout is refused at entry"))
+        "unreachable: the partitioned layout is refused at entry")))
   }
 
   /** [[admitBatch]]'s SIGNATURE sibling (r13) — the sixth admission
@@ -339,15 +381,14 @@ object Admission {
                           sigCol: String, maxDistance: Int = 3,
                           maxBucketSize: Int = 1000,
                           dedupWithinBatch: Boolean = true,
-                          batchId: Long = -1L,
-                          collectStats: Boolean = true): AdmitStats = {
+                          batchId: Long = -1L): AdmitStats = {
     admitCore(batch, corpusPath, indexPath, idCol, batchId,
-      dedupWithinBatch, collectStats,
+      dedupWithinBatch, Space(
       refuseInPlace = Some(("the signature index", "narrow rows")),
-      screen = (fresh, _, index) =>
-        Dedup.signaturePairsAgainstIndex(fresh, index, idCol, sigCol,
+      screen = (fresh, _, index) => matchedIds(
+        Dedup.signaturePairsAgainstIndex(fresh.df, index, idCol, sigCol,
             maxDistance, maxBucketSize)
-          .withColumnRenamed("id_b", "id_new"),
+          .withColumnRenamed("id_b", "id_new")),
       dedupWithin = screened =>
         Dedup.signatureDedup(screened, idCol, sigCol, maxDistance,
           maxBucketSize),
@@ -355,7 +396,7 @@ object Admission {
         Dedup.signatureIndexUpdate(index, admitted, idCol, sigCol,
           maxDistance),
       foldInPlace = (_, _, _) => sys.error(
-        "unreachable: the partitioned layout is refused at entry"))
+        "unreachable: the partitioned layout is refused at entry")))
   }
 
   /** [[admitBatch]]'s substring sibling: the near screen is
@@ -393,7 +434,6 @@ object Admission {
                           hashKeys: Boolean = true,
                           dedupWithinBatch: Boolean = false,
                           batchId: Long = -1L,
-                          collectStats: Boolean = true,
                           compactFileThreshold: Int = 0,
                           compactPartitions: Int = 32): AdmitStats = {
     require(maxDupCoverage >= 0.0 && maxDupCoverage < 1.0,
@@ -412,12 +452,12 @@ object Admission {
         .select(col(idCol))
     }
     admitCore(batch, corpusPath, indexPath, idCol, batchId,
-      dedupWithinBatch, collectStats,
-      screen = (fresh, _, index) =>
-        overCovered(fresh,
-          SubstringDedup.duplicateSpansAgainst(fresh, index, idCol,
+      dedupWithinBatch, Space(
+      screen = (fresh, _, index) => matchedIds(
+        overCovered(fresh.df,
+          SubstringDedup.duplicateSpansAgainst(fresh.df, index, idCol,
             textCol, k, hashKeys))
-          .select(col(idCol).as("id_new")),
+          .select(col(idCol).as("id_new"))),
       dedupWithin = screened =>
         screened.join(
           overCovered(screened,
@@ -436,7 +476,7 @@ object Admission {
           SubstringDedup.gramIndexCompact(spark, path, compactPartitions)
         ()
       },
-      forceInPlace = true)
+      forceInPlace = true))
   }
 
   /** Continuous admission: drains `stream` (Trigger.AvailableNow) and
@@ -451,12 +491,11 @@ object Admission {
                   numHashes: Int = 64, bands: Int = 16,
                   shingleLen: Int = 3, seed: Long = 42L,
                   maxBucketSize: Int = 1000, threshold: Double = 0.8,
-                  dedupWithinBatch: Boolean = true,
-                  collectStats: Boolean = true): Seq[AdmitStats] =
+                  dedupWithinBatch: Boolean = true): Seq[AdmitStats] =
     streamCore(stream, checkpoint, (b, id) =>
       admitBatch(b, corpusPath, indexPath, idCol, textCol,
         numHashes, bands, shingleLen, seed, maxBucketSize, threshold,
-        dedupWithinBatch, batchId = id, collectStats = collectStats))
+        dedupWithinBatch, batchId = id))
 
   /** [[admitStream]]'s signature sibling: [[admitBatchSignature]]
     * per micro-batch (fingerprints computed upstream in the stream —
@@ -466,12 +505,10 @@ object Admission {
                            idCol: String, sigCol: String,
                            maxDistance: Int = 3,
                            maxBucketSize: Int = 1000,
-                           dedupWithinBatch: Boolean = true,
-                           collectStats: Boolean = true): Seq[AdmitStats] =
+                           dedupWithinBatch: Boolean = true): Seq[AdmitStats] =
     streamCore(stream, checkpoint, (b, id) =>
       admitBatchSignature(b, corpusPath, indexPath, idCol, sigCol,
-        maxDistance, maxBucketSize, dedupWithinBatch, batchId = id,
-        collectStats = collectStats))
+        maxDistance, maxBucketSize, dedupWithinBatch, batchId = id))
 
   /** [[admitStream]]'s substring sibling: [[admitBatchSubstring]] per
     * micro-batch through foreachBatch + checkpoint, same replay
@@ -482,13 +519,11 @@ object Admission {
                            maxDupCoverage: Double = 0.5,
                            hashKeys: Boolean = true,
                            dedupWithinBatch: Boolean = false,
-                           collectStats: Boolean = true,
                            compactFileThreshold: Int = 0,
                            compactPartitions: Int = 32): Seq[AdmitStats] =
     streamCore(stream, checkpoint, (b, id) =>
       admitBatchSubstring(b, corpusPath, indexPath, idCol, textCol, k,
         maxDupCoverage, hashKeys, dedupWithinBatch, batchId = id,
-        collectStats = collectStats,
         compactFileThreshold = compactFileThreshold,
         compactPartitions = compactPartitions))
 
@@ -509,13 +544,12 @@ object Admission {
                           centers: Seq[Seq[Double]],
                           minCosine: Double = 0.95,
                           maxClusterSize: Int = 10000,
-                          dedupWithinBatch: Boolean = true,
-                          collectStats: Boolean = true)
+                          dedupWithinBatch: Boolean = true)
   : Seq[AdmitStats] =
     streamCore(stream, checkpoint, (b, id) =>
       admitBatchSemantic(b, corpusPath, indexPath, idCol, vecCol,
         centers, minCosine, maxClusterSize, dedupWithinBatch,
-        batchId = id, collectStats = collectStats))
+        batchId = id))
 
   /** [[admitStream]]'s embedding sibling. */
   def admitStreamEmbedding(stream: DataFrame, corpusPath: String,
@@ -524,13 +558,12 @@ object Admission {
                            nTables: Int = 8, bitsPerTable: Int = 16,
                            seed: Long = 42L, maxBucketSize: Int = 10000,
                            threshold: Double = 0.95,
-                           dedupWithinBatch: Boolean = true,
-                           collectStats: Boolean = true)
+                           dedupWithinBatch: Boolean = true)
   : Seq[AdmitStats] =
     streamCore(stream, checkpoint, (b, id) =>
       admitBatchEmbedding(b, corpusPath, indexPath, idCol, vecCol, dim,
         nTables, bitsPerTable, seed, maxBucketSize, threshold,
-        dedupWithinBatch, batchId = id, collectStats = collectStats))
+        dedupWithinBatch, batchId = id))
 
   /** foreachBatch driver loop shared by the two admitStream faces.
     * The per-batch stats accumulate in a DRIVER-side buffer, which is

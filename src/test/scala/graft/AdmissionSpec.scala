@@ -51,6 +51,13 @@ class AdmissionSpec extends SparkTestBase {
     val s1 = admit(batch1, c, i, batchId = 1L)
     assert(s1 == Admission.AdmitStats(1L, 6L, 5L, 3L))
     assert(corpusIds(c) == ((0L until 40L) ++ Seq(100L, 101L, 103L)))
+    // the admitted rows land exactly as they arrived: batch columns
+    // only (no settle-scan feature column leaks into the corpus)
+    val stored = spark.read.parquet(c)
+    assert(stored.columns.toSeq == batch1.columns.toSeq)
+    assert(stored.filter($"doc_id" >= 100L).as[(Long, String)].collect()
+      .toSet == batch1.filter($"doc_id".isin(100L, 101L, 103L))
+      .as[(Long, String)].collect().toSet)
 
     // batch 2's near-dup of a batch-1 ADMISSION only drops if the
     // index fold actually happened
@@ -179,18 +186,59 @@ class AdmissionSpec extends SparkTestBase {
     assert(SubstringDedup.gramIndexFileCount(spark, i) <= 2)
   }
 
-  test("collectStats=false skips telemetry counts but admits identically") {
+  private def indexIds(i: String): Set[Long] =
+    spark.read.parquet(i).select(explode($"ids")).as[Long].collect().toSet
+
+  test("crash between corpus append and index swap: replay is a no-op") {
+    // the crash contract on Admission: a failure injected after the
+    // corpus append and before the index swap leaves the appended rows
+    // outside the index; replaying the batch admits nothing twice
     val (c, i) = setup()
-    val batch = Seq(100L -> freshText("n100"), 0L -> freshText("c0"))
-      .toDF("doc_id", "text")
-    val s = Admission.admitBatch(batch, c, i, "doc_id", "text",
-      numHashes = 64, bands = 32, threshold = 0.6, collectStats = false)
-    // batchRows is the only skipped count; afterIdScreen is always
-    // real since r15 — its count doubles as the cache-materialization
-    // barrier that keeps the corpus scanned once per cycle
-    assert(s.batchRows == -1L && s.afterIdScreen == 1L)
-    assert(s.admitted == 1L)
-    assert(corpusIds(c) == ((0L until 40L) :+ 100L))
+    val batch = Seq(
+      100L -> freshText("n100"), 101L -> freshText("n101"),
+      0L -> freshText("c0")).toDF("doc_id", "text")
+    val indexBefore = indexIds(i)
+    val space = Admission.minhashSpace("doc_id", "text", numHashes = 64,
+      bands = 32, shingleLen = 3, seed = 42L, maxBucketSize = 1000,
+      threshold = 0.6)
+    val e = intercept[IllegalStateException] {
+      Admission.admitCore(batch, c, i, "doc_id", 1L, within = true, space,
+        beforeFold = () => throw new IllegalStateException("injected"))
+    }
+    assert(e.getMessage == "injected")
+    assert(corpusIds(c) == ((0L until 40L) ++ Seq(100L, 101L)))
+    assert(indexIds(i) == indexBefore)
+    // replay: the id probe drops every appended row, nothing is written
+    assert(admit(batch, c, i, batchId = 1L)
+      == Admission.AdmitStats(1L, 3L, 0L, 0L))
+    // each corpus id once, the corpus readable, the batch absent from
+    // the index (a recall gap until an index rebuild, never corruption)
+    val ids = spark.read.parquet(c).select($"doc_id").as[Long].collect()
+    assert(ids.length == ids.distinct.length)
+    assert(ids.sorted.toSeq == ((0L until 40L) ++ Seq(100L, 101L)))
+    assert(indexIds(i) == indexBefore)
+    assert(!indexIds(i).exists(Set(100L, 101L)))
+  }
+
+  test("steady-state admitBatch cycle runs at most 15 Spark jobs") {
+    // default session settings (AQE and broadcast joins on); the first
+    // cycle warms up and registers the index it swap-writes, so the
+    // counted cycle runs no validation job
+    val (c, i) = setup()
+    admit(Seq(100L -> freshText("n100"), 101L -> freshText("n101"))
+      .toDF("doc_id", "text"), c, i, within = false, batchId = 1L)
+    val batch = Seq(
+      200L -> freshText("n200"),           // fresh -> admitted
+      201L -> (freshText("n100") + " k"),  // near copy of 100 -> screened
+      202L -> freshText("c3"),             // exact text of 3 -> screened
+      5L -> freshText("c5")                // id replay -> id probe
+    ).toDF("doc_id", "text")
+    var stats: Admission.AdmitStats = null
+    val jobs = jobsDuring {
+      stats = admit(batch, c, i, within = false, batchId = 2L)
+    }
+    assert(stats == Admission.AdmitStats(2L, 4L, 3L, 1L))
+    assert(jobs <= 15, s"steady-state cycle ran $jobs jobs")
   }
 
   test("compactCorpus collapses per-batch append files, row-preserving") {

@@ -245,6 +245,41 @@ class DedupSpec extends SparkTestBase {
     assert(e3.getMessage.contains("__maxBucketSize"))
   }
 
+  test("index param memo: params checked every call, rewrites re-read, " +
+    "a cycle-written index is a hit") {
+    import java.nio.file.Files
+    val hist = corpus.filter($"doc_id" < 10000)
+    val newBatch = corpus.filter($"doc_id" >= 10000)
+    val dir = Files.createTempDirectory("graft_mh_memo").toString + "/idx"
+    def build() = Dedup.minhashIndex(hist, "doc_id", "text",
+      numHashes = 64, bands = 32).write.mode("overwrite").parquet(dir)
+    // minhashIndexUpdate is lazy but for its validation, so the jobs it
+    // runs are the validation's (the read runs outside the count)
+    def updateJobs(bands: Int): Int = {
+      val idx = spark.read.parquet(dir)
+      jobsDuring { Dedup.minhashIndexUpdate(idx, newBatch, "doc_id",
+        "text", numHashes = 64, bands = bands) }
+    }
+    build()
+    assert(updateJobs(32) > 0, "first read of a file set validates")
+    assert(updateJobs(32) == 0, "same files: memo hit")
+    // memoized files, different params: the check still runs and throws
+    val e = intercept[IllegalArgumentException](updateJobs(16))
+    assert(e.getMessage.contains("screened with"))
+    // a rewrite has new part files: read and validated again
+    build()
+    assert(updateJobs(32) > 0, "rewritten index must be validated again")
+    assert(updateJobs(32) == 0)
+    // an index an admission cycle swap-wrote is registered by the cycle
+    val corpusDir = Files.createTempDirectory("graft_mh_memo_c").toString
+    hist.write.mode("overwrite").parquet(corpusDir)
+    graft.streaming.Admission.admitBatch(newBatch, corpusDir, dir,
+      "doc_id", "text", numHashes = 64, bands = 32, threshold = 0.6,
+      dedupWithinBatch = false)
+    assert(updateJobs(32) == 0, "cycle-written index must be a memo hit")
+  }
+
+
   /** embedding corpus + planted scaled copies (scaling preserves
     * direction → cosine 1 with the original) — mirrors q118/q119 */
   private lazy val embCorpus = spark.read

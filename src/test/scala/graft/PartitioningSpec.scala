@@ -14,24 +14,6 @@ import graft.operators.Partitioning
 class PartitioningSpec extends SparkTestBase {
   import spark.implicits._
 
-  /** Raw job counter — unlike countJobs it does NOT disable AQE or
-    * broadcast joins, because the plan shapes under test (adaptive
-    * wrapper, broadcast exchange) are exactly what those confs
-    * would erase. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener,
-      SparkListenerJobStart}
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(500) /* listener bus is async */ }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
-
   test("spread: shuffle-shaped (groupBy) plan is left alone, zero probe jobs") {
     val agg = spark.range(0, 1000, 1, 2).toDF("id")
       .groupBy((F.col("id") % 10).as("k"))

@@ -25,26 +25,32 @@ abstract class SparkTestBase extends AnyFunSuite {
     * both confs. Used by the fused-scan pins — "this used to be two
     * jobs, now it is one". */
   def countJobs(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener,
-      SparkListenerJobStart}
-    val sc = spark.sparkContext
     val conf = spark.conf
     val aqe = conf.get("spark.sql.adaptive.enabled")
     val bc = conf.get("spark.sql.autoBroadcastJoinThreshold")
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try jobsDuring(body)
+    finally {
+      conf.set("spark.sql.adaptive.enabled", aqe)
+      conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
+    }
+  }
+
+  /** Raw job counter — unlike [[countJobs]] it does NOT disable AQE or
+    * broadcast joins: it counts what the session's default settings
+    * run (adaptive stages and broadcast exchanges included). */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerJobStart}
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         n.incrementAndGet()
     }
-    sc.addSparkListener(l)
+    spark.sparkContext.addSparkListener(l)
     try { body; Thread.sleep(500) /* listener bus is async */ }
-    finally {
-      sc.removeSparkListener(l)
-      conf.set("spark.sql.adaptive.enabled", aqe)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
-    }
+    finally spark.sparkContext.removeSparkListener(l)
     n.get
   }
 }
