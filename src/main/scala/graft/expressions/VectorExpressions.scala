@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -122,6 +122,126 @@ object VectorExpressions {
       })
     override protected def withNewChildrenInternal(
         l: Expression, r: Expression): Expression = copy(l, r)
+  }
+
+  /** Within-cluster near-dup verification for SemDedup: over one
+    * cluster's collected members, an array of
+    * struct(id, v, centroid_cosine), emit every member pair with
+    * DISTINCT ids whose cosine is >= `minCosine`, as
+    * struct(id_a, id_b, cosine, cent_cos_a, cent_cos_b) with
+    * id_a < id_b (least/greatest under the id type's interpreted
+    * ordering, so any orderable id type works) and the cent_cos
+    * fields following their ids.
+    *
+    * VALUE CONTRACT: the cosine is [[CosineSimilarity]]'s arithmetic
+    * bit for bit — dot, then both squared norms, accumulated in index
+    * order over the common length, sqrt(na)·sqrt(nb), 0.0 on a zero
+    * norm. Each member's squared norm is accumulated ONCE, in the same
+    * order, and reused for every pair of equal-length vectors (the
+    * common case); unequal lengths re-accumulate over the common
+    * prefix. The threshold compares as SQL `>=` does (NaN is largest).
+    * Members with a null id or a null vector never pair (the id join
+    * and the null-intolerant cosine of the join-back pipeline dropped
+    * them too). Copies of one id inside a cluster pair with every
+    * other id once per copy — the multiplicity the join-back gave.
+    *
+    * Cost: n_c²/2 dot products of one cluster inside one task; only
+    * verified pairs leave it. Memory: the members' vectors, densified
+    * to doubles (n_c × dim × 8 B). */
+  case class ClusterPairs(child: Expression, minCosine: Double)
+      extends UnaryExpression {
+    @transient private lazy val memberType: StructType =
+      child.dataType.asInstanceOf[ArrayType].elementType
+        .asInstanceOf[StructType]
+    @transient private lazy val idType: DataType =
+      memberType.fields(0).dataType
+    @transient private lazy val vecElemType: DataType =
+      memberType.fields(1).dataType.asInstanceOf[ArrayType].elementType
+    @transient private lazy val idOrdering: Ordering[Any] =
+      org.apache.spark.sql.catalyst.util.TypeUtils
+        .getInterpretedOrdering(idType)
+    override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("id_a", idType), StructField("id_b", idType),
+      StructField("cosine", DoubleType, nullable = false),
+      StructField("cent_cos_a", DoubleType),
+      StructField("cent_cos_b", DoubleType))), containsNull = false)
+
+    private def cosineOf(x: Array[Double], sx: Double,
+                         y: Array[Double], sy: Double): Double = {
+      val n = math.min(x.length, y.length)
+      var dot = 0.0
+      var i = 0
+      while (i < n) { dot += x(i) * y(i); i += 1 }
+      val na = if (x.length == n) sx else sumSq(x, n)
+      val nb = if (y.length == n) sy else sumSq(y, n)
+      val nn = math.sqrt(na) * math.sqrt(nb)
+      if (nn == 0.0) 0.0 else dot / nn
+    }
+
+    private def sumSq(x: Array[Double], n: Int): Double = {
+      var s = 0.0
+      var i = 0
+      while (i < n) { s += x(i) * x(i); i += 1 }
+      s
+    }
+
+    def compute(arr: ArrayData): ArrayData = {
+      val n = arr.numElements()
+      val et = vecElemType
+      val ids = new Array[Any](n)
+      val vecs = new Array[Array[Double]](n)
+      val sq = new Array[Double](n)
+      val cc = new Array[Any](n)
+      var k = 0
+      var i = 0
+      while (i < n) {
+        if (!arr.isNullAt(i)) {
+          val mem = arr.getStruct(i, 3)
+          if (!mem.isNullAt(0) && !mem.isNullAt(1)) {
+            val va = mem.getArray(1)
+            val v = new Array[Double](va.numElements())
+            var t = 0
+            while (t < v.length) { v(t) = elemDouble(va, et, t); t += 1 }
+            ids(k) = InternalRow.copyValue(mem.get(0, idType))
+            vecs(k) = v
+            sq(k) = sumSq(v, v.length)
+            cc(k) = if (mem.isNullAt(2)) null else mem.getDouble(2)
+            k += 1
+          }
+        }
+        i += 1
+      }
+      val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      var a = 0
+      while (a < k) {
+        var b = a + 1
+        while (b < k) {
+          val ord = idOrdering.compare(ids(a), ids(b))
+          if (ord != 0) {
+            val c = cosineOf(vecs(a), sq(a), vecs(b), sq(b))
+            if (org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+                .compareDoubles(c, minCosine) >= 0) {
+              val (lo, hi) = if (ord < 0) (a, b) else (b, a)
+              out += new GenericInternalRow(
+                Array[Any](ids(lo), ids(hi), c, cc(lo), cc(hi)))
+            }
+          }
+          b += 1
+        }
+        a += 1
+      }
+      new GenericArrayData(out.toArray[Any])
+    }
+    override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext,
+                                     ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("clusterPairs", this,
+        classOf[ClusterPairs].getName)
+      nullSafeCodeGen(ctx, ev, a =>
+        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.compute($a);")
+    }
+    override protected def withNewChildInternal(c: Expression) =
+      copy(child = c)
   }
 
   /** 64-bit SimHash over an array<string> of tokens: one pass, per
@@ -495,6 +615,8 @@ object VectorExpressions {
     column(DotProduct(expression(a), expression(b)))
   def cosine(a: Column, b: Column): Column =
     column(CosineSimilarity(expression(a), expression(b)))
+  def clusterPairs(members: Column, minCosine: Double): Column =
+    column(ClusterPairs(expression(members), minCosine))
   def simhash64(tokens: Column): Column = column(SimHash64(expression(tokens)))
   def simhashMd5(tokens: Column): Column = column(SimHashMd5(expression(tokens)))
   def minhashSignature(shingles: Column, coeffs: Seq[(Long, Long)],

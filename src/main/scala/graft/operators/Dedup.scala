@@ -122,8 +122,7 @@ object Dedup {
   /** expand a bucket's collected id array into ordered unique pairs:
     * one hash aggregation + in-row expansion instead of a bucket
     * self-join (no join-row blowup on skewed buckets). Callers filter
-    * bucket size into [2, cap] BEFORE this. (Shared with SemDedup,
-    * whose clusters play the bucket role.) */
+    * bucket size into [2, cap] BEFORE this. */
   private[operators] def pairsFromBuckets(buckets: DataFrame): DataFrame =
     buckets
       .select(explode(expr(

@@ -20,15 +20,23 @@ import graft.functions.TextFunctions
   * made deterministic with the q140 md5-uniform discipline).
   *
   * Engine shape at 100 TB:
-  *  - the FIT is two corpus passes, each partial-aggregated into at
-  *    most m rows before the (only) shuffle — the exchange carries
-  *    (bucket, partial count), never grams or text.
+  *  - the FIT is two corpus scans, each partial-aggregated into at
+  *    most m (bucket, count) rows before its only shuffle — the
+  *    exchange carries (bucket, partial count), never grams or text —
+  *    and each collected to the driver (≤ m rows by construction).
+  *    The driver zero-fills both count vectors and computes the
+  *    smoothed ratio table with `StrictMath.log` (what Spark's `log`
+  *    evaluates, so the table is bit-identical to the column-math
+  *    fit); [[logRatioTable]] is therefore EAGER and returns the
+  *    table as a local relation. No range(m) join, no totals
+  *    aggregate, no cross join.
   *  - the per-bucket log-ratio table is m rows (m defaults to 2¹³;
   *    hard-capped so it stays a bounded driver read). The WEIGHTING
-  *    pass collects it once into one array LITERAL and scores the
-  *    corpus in a single codegen'd pass — no join, no shuffle, no
-  *    per-doc gram explosion; the hashing-trick point of the paper
-  *    is exactly that the model stays O(m) however big the corpora.
+  *    pass collects it once into one array LITERAL (from the local
+  *    relation: no job) and scores the corpus in a single codegen'd
+  *    pass — no join, no shuffle, no per-doc gram explosion; the
+  *    hashing-trick point of the paper is exactly that the model
+  *    stays O(m) however big the corpora.
   *  - selection is a global top-n on (key, id) — TakeOrderedAndProject,
   *    never a full sort.
   *
@@ -107,46 +115,57 @@ object Dsir {
       transform(concat(t, bigrams), g => bucketOf(g, m, hash))
     }
 
+  /** One corpus's gram count per bucket, zero-filled to all m
+    * buckets on the driver. r18 opt: the fit's gram explosion runs
+    * on a spread projection (guide §2.5 — a single-file scan is ONE
+    * partition; md5-per-gram hashing would serialize) and partial-
+    * aggregates to ≤ m rows before the shuffle; the collect is
+    * bounded by m ([[MaxBuckets]]). */
+  private def bucketCounts(df: DataFrame, textCol: String, m: Int,
+                           hash: String): Array[Long] = {
+    val cnt = new Array[Long](m)
+    Partitioning.spread(df.select(col(textCol).as("__txt")))
+      .select(explode(bucketArr(col("__txt"), m, hash)).as("bucket"))
+      .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
+      .collect()
+      .foreach(r => if (!r.isNullAt(0)) cnt(r.getLong(0).toInt) = r.getLong(1))
+    cnt
+  }
+
   /** corpus bucket counts, ALL m buckets zero-filled (the smoothing
-    * denominator needs every bucket to exist exactly once). */
+    * denominator needs every bucket to exist exactly once). Eager:
+    * one scan, returned as an m-row local relation. */
   def hashedNgramCounts(df: DataFrame, textCol: String, m: Int,
                         hash: String = "md5"): DataFrame = {
     requireM(m)
     requireHash(hash)
-    // r18 opt: spread the fit's gram explosion (guide §2.5 — a
-    // single-file scan is ONE partition; md5-per-gram hashing would
-    // serialize). Weighting stays a shuffle-free projection.
-    val cnt = Partitioning.spread(
-        df.select(col(textCol).as("__txt")))
-      .select(explode(bucketArr(col("__txt"), m, hash)).as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
-    df.sparkSession.range(m).select(col("id").as("bucket"))
-      .join(cnt, Seq("bucket"), "left")
-      .select(col("bucket"), coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val cnt = bucketCounts(df, textCol, m, hash)
+    df.sparkSession.createDataFrame(
+        Seq.tabulate(m)(b => (b.toLong, cnt(b))))
+      .toDF("bucket", "cnt")
   }
 
   /** m-row (bucket, log_ratio) table from a target corpus and the
-    * raw pool. α > 0 keeps unseen buckets finite on both sides. */
+    * raw pool. α > 0 keeps unseen buckets finite on both sides.
+    * Eager: two scans, each collected to ≤ m rows; the table is
+    * computed on the driver with the column-math fit's exact
+    * arithmetic (double `+`, `/`, `StrictMath.log`, in its order)
+    * and returned as a local relation. */
   def logRatioTable(target: DataFrame, raw: DataFrame, textCol: String,
                     m: Int, alpha: Double = 1.0,
                     hash: String = "md5"): DataFrame = {
     requireM(m)
     require(alpha > 0, s"alpha must be positive, got $alpha")
     requireHash(hash)
-    val t = hashedNgramCounts(target, textCol, m, hash)
-      .select(col("bucket"), col("cnt").as("t_cnt"))
-    val r = hashedNgramCounts(raw, textCol, m, hash)
-      .select(col("bucket"), col("cnt").as("r_cnt"))
-    val am = lit(alpha * m)
-    val joined = t.join(r, Seq("bucket"))
-    // totals via a 1-row aggregate broadcast-crossed back (the
-    // entropy/MI house shape) — m-bounded, no single-partition window
-    val tot = joined.agg(sum(col("t_cnt")).as("__T"),
-      sum(col("r_cnt")).as("__Q"))
-    joined.crossJoin(broadcast(tot)).select(col("bucket"),
-      (log((col("t_cnt") + alpha) / (col("__T") + am))
-        - log((col("r_cnt") + alpha) / (col("__Q") + am)))
-        .as("log_ratio"))
+    val t = bucketCounts(target, textCol, m, hash)
+    val r = bucketCounts(raw, textCol, m, hash)
+    val (tt, rt) = (t.sum, r.sum)
+    val am = alpha * m
+    target.sparkSession.createDataFrame(Seq.tabulate(m) { b =>
+        (b.toLong, StrictMath.log((t(b) + alpha) / (tt + am))
+          - StrictMath.log((r(b) + alpha) / (rt + am)))
+      })
+      .toDF("bucket", "log_ratio")
   }
 
   /** Score `df`: adds `log_weight` = Σ_grams log_ratio[bucket(gram)].

@@ -34,9 +34,10 @@ import graft.functions.TextFunctions
   *
   * Shape at 100 TB: training is one explode + partial-aggregated
   * groupBy (the corpus never reshuffles by anything but the gram
-  * bucket) plus a languages-sized totals join; CLASSIFY is zero
-  * shuffles and zero joins — the model collects to the driver
-  * (bounded: langs × m ≤ [[LangId.MaxServedCells]] cells), becomes
+  * bucket) whose ≤ langs × m rows are collected and turned into the
+  * model on the driver; CLASSIFY is zero shuffles and zero joins —
+  * the model collects to the driver (bounded at train and serve
+  * time: langs × m ≤ [[LangId.MaxServedCells]] cells), becomes
   * per-language literal arrays, and every document scores in one
   * whole-stage-codegen projection over the scan: score(l) =
   * Σ_grams log_prob[l][bucket(gram)], argmax with ties to the
@@ -115,6 +116,14 @@ object LangId {
                                   nMax: Int): Column =
     transform(charGrams(text, nMin, nMax), g => bucketOf(g, m))
 
+  /** [[classify]] serves langs × m doubles as literals; a model past
+    * [[MaxServedCells]] is refused at train time and at serve time
+    * with this one message. */
+  private def requireServable(nLangs: Int, m: Int): Unit =
+    require(nLangs.toLong * m <= MaxServedCells,
+      s"langid model too large to serve as literals: $nLangs " +
+        s"langs x $m buckets > $MaxServedCells cells — lower m")
+
   /** Fit the model: (lang, bucket, log_prob, __fmt, __m, __nmin,
     * __nmax) rows — observed buckets sparse, plus one `bucket = -1`
     * floor row per language with the unseen-bucket log-probability.
@@ -124,42 +133,44 @@ object LangId {
     * serve-time m would otherwise pass the bucket < m range check
     * and silently hash grams into buckets the model never saw
     * (ADVICE r17). Rows with null text or null lang are ignored.
-    * One explode + partial-agg groupBy; the per-language totals ride
-    * a broadcast join (languages are few). */
+    *
+    * EAGER driver build: one explode + partial-agg groupBy, whose
+    * (lang, bucket, count) rows are collected — bounded: a servable
+    * model has at most langs × m ≤ [[MaxServedCells]] of them, so at
+    * most MaxServedCells + 1 rows are taken, and a model [[classify]]
+    * would refuse is refused here with the same message. Totals,
+    * observed rows, floor rows and stamps are computed on the driver
+    * with the column-math fit's exact arithmetic (double `+`, `/`,
+    * `StrictMath.log` — what Spark's `log` evaluates) and returned as
+    * a local relation, so the gram explosion runs exactly once and
+    * serving collects the model without a job. */
   def train(df: DataFrame, textCol: String, langCol: String,
             m: Int = 4096, alpha: Double = 1.0,
             nMin: Int = 2, nMax: Int = 3): DataFrame = {
     requireM(m); requireN(nMin, nMax)
     require(alpha > 0, s"alpha must be positive, got $alpha")
-    // r18 opt (guide §5 — eager cut): the model plan references this
-    // aggregation THREE times (broadcast(tot), observed's join input,
-    // floor's tot) and the subtrees do not share exchanges —
-    // measured: every model materialization paid the md5-per-gram
-    // explosion 3x. `cnt` is bounded (≤ langs × m rows), so an eager
-    // localCheckpoint computes the explosion exactly once. (A
-    // Partitioning.spread of the input was tried and REVERTED: on a
-    // cached-join input its plan probe materializes AQE stages — a
-    // throwaway job — and the round-robin exchange defeated nothing
-    // that matters once the explosion runs once.)
     val cnt = df
       .filter(col(langCol).isNotNull && col(textCol).isNotNull)
       .select(col(langCol).cast("string").as("lang"),
         explode(bucketArr(col(textCol), m, nMin, nMax)).as("bucket"))
       .groupBy(col("lang"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val tot = cnt.groupBy(col("lang")).agg(sum(col("cnt")).as("__tot"))
-    val am = lit(alpha * m)
-    val observed = cnt.join(broadcast(tot), Seq("lang"))
-      .select(col("lang"), col("bucket"),
-        log((col("cnt") + alpha) / (col("__tot") + am)).as("log_prob"))
-    val floor = tot.select(col("lang"), lit(-1L).as("bucket"),
-      log(lit(alpha) / (col("__tot") + am)).as("log_prob"))
-    observed.unionAll(floor)
-      .withColumn("__fmt", lit(LangIdModelFormat))
-      .withColumn("__m", lit(m))
-      .withColumn("__nmin", lit(nMin))
-      .withColumn("__nmax", lit(nMax))
+      .limit((MaxServedCells + 1).toInt)
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    // every language holds <= m buckets, so when the take bound was
+    // hit the languages already seen fail this check too
+    val tot = cnt.groupMapReduce(_._1)(_._3)(_ + _)
+    requireServable(tot.size, m)
+    val am = alpha * m
+    val observed = cnt.map { case (l, b, c) =>
+      (l, b, StrictMath.log((c + alpha) / (tot(l) + am))) }
+    val floor = tot.toSeq.sortBy(_._1).map { case (l, t) =>
+      (l, -1L, StrictMath.log(alpha / (t + am))) }
+    df.sparkSession.createDataFrame((observed ++ floor).toSeq.map {
+        case (l, b, p) => (l, b, p, LangIdModelFormat, m, nMin, nMax) })
+      .toDF("lang", "bucket", "log_prob", "__fmt", "__m", "__nmin",
+        "__nmax")
   }
 
   /** collect + validate a [[train]] model into per-language dense
@@ -192,9 +203,7 @@ object LangId {
     val langs = rows.map(_.getString(0)).distinct.sorted.toSeq
     require(langs.length >= 2,
       s"langid needs >= 2 languages, model has ${langs.length}")
-    require(langs.length.toLong * m <= MaxServedCells,
-      s"langid model too large to serve as literals: ${langs.length} " +
-        s"langs x $m buckets > $MaxServedCells cells — lower m")
+    requireServable(langs.length, m)
     val floors = rows.filter(_.getLong(1) == -1L)
       .map(r => r.getString(0) -> r.getDouble(2)).toMap
     langs.foreach(l => require(floors.contains(l),

@@ -26,18 +26,23 @@ import graft.functions.VectorFunctions
   *    codegen'd corpus pass: an array of per-center squared-L2
   *    expressions folded in index order, argmin via struct-min
   *    (ties to the lowest center index). No shuffle.
-  *  - candidates come from a per-cluster collected-id aggregate with
-  *    a `maxClusterSize` guard — the identical shape (and skew
-  *    trade) as minhashPairs' band buckets: a degenerate center that
-  *    attracts a corpus-sized cluster contributes NO candidate pairs
-  *    instead of n_c², and the refusal is visible in
+  *  - candidates come from one per-cluster aggregate that collects
+  *    each member's (id, vector, centroid cosine), with a
+  *    `maxClusterSize` guard applied count-first: a degenerate center
+  *    that attracts a corpus-sized cluster is refused by its count
+  *    before any member list is buffered, contributes NO candidate
+  *    pairs instead of n_c², and the refusal is visible in
   *    [[clusterSizes]] rather than silent (callers audit / refit
-  *    centers). The shuffle carries (cluster, id) pairs, never
-  *    vectors.
-  *  - verification joins vectors back by id (two hash joins against
-  *    the assigned frame) and keeps cosine >= `minCosine` with the
-  *    native codegen'd cosine — never a cluster self-join of raw
-  *    vectors.
+  *    centers). The shuffle carries each vector exactly once.
+  *  - verification runs inside the aggregation's task: one native
+  *    kernel ([[graft.expressions.VectorExpressions.ClusterPairs]],
+  *    [[graft.expressions.VectorExpressions.CosineSimilarity]]'s
+  *    arithmetic bit for bit) scores every member pair of the cluster
+  *    and emits only pairs at cosine >= `minCosine` — no candidate
+  *    pair row, no join back by id, no self-join of raw vectors.
+  *    Memory bound: one admitted cluster's members per task,
+  *    `maxClusterSize × dim × 8 B` (5,000 × 64-d ≈ 2.6 MB at the
+  *    k ∝ n default target of [[fitCenters]]).
   *
   * Keep policies (`keep`):
   *  - `"min_id"` (default for gates): the lowest id of a dup pair
@@ -315,7 +320,7 @@ object SemDedup {
     * exhaustive (exact) when nProbe/nCells are 0, approximate when a
     * caller sets them. Returns (idName, vecName, cluster,
     * centroid_cosine) either way. */
-  private def assignWithVec(rows: DataFrame, idName: String,
+  private[graft] def assignWithVec(rows: DataFrame, idName: String,
                             vecName: String, centers: Seq[Seq[Double]],
                             nProbe: Int, nCells: Int): DataFrame =
     if (nProbe == 0 && nCells == 0 &&
@@ -346,31 +351,44 @@ object SemDedup {
           col(vecCol).as("__rv")), "__rv", centers, nProbe, nCells)
         .groupBy(col("cluster")).agg(count(lit(1)).as("n"))
 
-  /** Admitted-cluster id buckets: (cluster, ids) for clusters whose
-    * COUNT is in [2, maxClusterSize]. Count-first by construction:
-    * the size guard runs on a per-cluster `count` aggregate (output
-    * bounded by |centers| rows — it broadcasts) and over-cap
-    * clusters are semi-joined OUT before any `collect_list` runs, so
-    * a degenerate center that attracts a corpus-sized cluster is
-    * refused by its count and never buffers its id array in an
-    * aggregation task (the filter-after-collect shape would build
-    * the array first and drop it after — cap'd pair explosion but
-    * unbounded executor memory). SemDedupSpec pins the plan shape:
-    * the collect_list aggregate sits ABOVE the semi join. */
+  /** Admitted-cluster member lists: (cluster, members) for clusters
+    * whose COUNT is in [2, maxClusterSize], members =
+    * array<struct(id, v, centroid_cosine)>. Count-first by
+    * construction: the size guard runs on a per-cluster `count`
+    * aggregate (output bounded by |centers| rows — it broadcasts) and
+    * over-cap clusters are semi-joined OUT before any `collect_list`
+    * runs, so a degenerate center that attracts a corpus-sized
+    * cluster is refused by its count and never buffers its member
+    * array in an aggregation task (the filter-after-collect shape
+    * would build the array first and drop it after — cap'd pair
+    * explosion but unbounded executor memory). SemDedupSpec pins the
+    * plan shape: the collect_list aggregate sits ABOVE the semi
+    * join. */
   private[graft] def candidateBuckets(asg: DataFrame,
                                       maxClusterSize: Int): DataFrame = {
     val ok = asg.groupBy(col("cluster")).agg(count(lit(1)).as("__n"))
       .filter(col("__n").between(2, maxClusterSize))
       .select(col("cluster"))
     asg.join(broadcast(ok), Seq("cluster"), "left_semi")
-      .groupBy(col("cluster")).agg(collect_list(col("id")).as("ids"))
+      .groupBy(col("cluster"))
+      .agg(collect_list(struct(col("id"), col("v"),
+        col("centroid_cosine"))).as("members"))
   }
 
   /** Within-cluster near-dup pairs: (id_a, id_b, cluster, cosine,
     * cent_cos_a, cent_cos_b) with id_a < id_b and cosine >=
-    * `minCosine`. Candidates are bucket-expanded per cluster (size
-    * guard [2, maxClusterSize], count-first — see
-    * [[candidateBuckets]]), then cosine-verified via id joins. */
+    * `minCosine`. Each admitted cluster's members are collected once
+    * (size guard [2, maxClusterSize], count-first — see
+    * [[candidateBuckets]]) and verified in the task that holds them
+    * ([[graft.expressions.VectorExpressions.ClusterPairs]]). Both
+    * ends of every pair are rows of ONE cluster — also when an id
+    * occurs in several clusters, which the id-keyed join-back this
+    * replaced leaked across (recall stays 0 across a boundary, as
+    * documented). EAGER: the assignment is cached so the count-first
+    * aggregate and the member collect read one argmin pass (measured
+    * in the `curate` benchmark: assigning twice cost more than the
+    * two barrier jobs), and the pair set — small next to the corpus —
+    * is checkpointed before the cache is released. */
   def semDedupPairs(df: DataFrame, idCol: String, vecCol: String,
                     centers: Seq[Seq[Double]], minCosine: Double,
                     maxClusterSize: Int = 10000,
@@ -383,23 +401,13 @@ object SemDedup {
     val asg = Partitioning.spread(
       assignWithVec(df.select(col(idCol).as("id"), col(vecCol).as("v")),
         "id", "v", centers, nProbe, nCells)).cache()
-    // duplicated ids would otherwise self-pair (least==greatest) and
-    // make a row its own loser — a duplicated-id GROUP must dedup
-    // against OTHERS, not against itself (collapsing id copies is
-    // exact dedup's job, not semantic dedup's)
-    val cand = Dedup.pairsFromBuckets(
-      candidateBuckets(asg, maxClusterSize))
-      .filter(col("id_a") =!= col("id_b"))
-    val verified = cand
-      .join(asg.select(col("id").as("id_a"), col("v").as("v_a"),
-        col("cluster"), col("centroid_cosine").as("cent_cos_a")), Seq("id_a"))
-      .join(asg.select(col("id").as("id_b"), col("v").as("v_b"),
-        col("centroid_cosine").as("cent_cos_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("cluster"),
-        VectorFunctions.cosine(col("v_a"), col("v_b")).as("cosine"),
-        col("cent_cos_a"), col("cent_cos_b"))
-      .filter(col("cosine") >= minCosine)
-    Dedup.materializeAndRelease(verified, asg)
+    val pairs = candidateBuckets(asg, maxClusterSize)
+      .select(col("cluster"), explode(
+        graft.expressions.VectorExpressions.clusterPairs(col("members"),
+          minCosine)).as("p"))
+      .select(col("p.id_a"), col("p.id_b"), col("cluster"),
+        col("p.cosine"), col("p.cent_cos_a"), col("p.cent_cos_b"))
+    Dedup.materializeAndRelease(pairs, asg)
   }
 
   /** Rows that SURVIVE semantic dedup: a row is dropped iff some
@@ -419,11 +427,17 @@ object SemDedup {
     // typo'd keep must not cost a full corpus pass first
     require(keep == "min_id" || keep == "centroid",
       s"keep must be min_id or centroid, got $keep")
-    val pairs = semDedupPairs(df, idCol, vecCol, centers, minCosine,
-      maxClusterSize, nProbe, nCells)
+    survivors(df, idCol, semDedupPairs(df, idCol, vecCol, centers,
+      minCosine, maxClusterSize, nProbe, nCells), keep)
+  }
+
+  /** The keep rule of [[semDedup]]: `df` minus every id that loses a
+    * pair of `pairs` under `keep`. */
+  private[graft] def survivors(df: DataFrame, idCol: String,
+                               pairs: DataFrame, keep: String): DataFrame = {
     val losers = (keep match {
       case "min_id" =>
-        // pairsFromBuckets emits id_a < id_b, so the loser is id_b
+        // pairs carry id_a < id_b, so the loser is id_b
         pairs.select(col("id_b").as("__loser"))
       case "centroid" =>
         // paper rule: LOWER centroid cosine survives (keep the edge

@@ -1680,12 +1680,10 @@ object ScaleSmoke {
         }.reduce(_ unionByName _).cache()
         val n = c.count()
         var t0 = System.nanoTime()
-        // cache the ratio table: importanceWeights collects it, and
-        // an uncached collect would RE-RUN both fit aggregations
-        // inside the weigh window — the weigh number must price the
-        // scoring pass, not a second fit
+        // the fit is eager (a local ratio table), so the weigh
+        // window prices the scoring pass alone
         val ratios = Dsir.logRatioTable(
-          c.filter(col("lang") === "en"), c, "text", 8192).cache()
+          c.filter(col("lang") === "en"), c, "text", 8192)
         val mRows = ratios.count()
         val fitS = (System.nanoTime() - t0) / 1e9
         t0 = System.nanoTime()
@@ -1695,15 +1693,13 @@ object ScaleSmoke {
         println(f"[scale-smoke] dsir k=$k%-2d n=$n%-6d " +
           f"fit=$fitS%7.2f s (model=$mRows rows)  " +
           f"weigh=$weighS%7.2f s  scored=$scored")
-        ratios.unpersist()
         // hash-family A/B (r13): same pipeline under xxhash64 — no
         // per-gram hex string, so fit+weigh price the production
         // bucket chain against the SQL-replayable md5 default
         t0 = System.nanoTime()
         val ratiosXx = Dsir.logRatioTable(
           c.filter(col("lang") === "en"), c, "text", 8192,
-          hash = "xxhash64").cache()
-        ratiosXx.count()
+          hash = "xxhash64")
         val fitXx = (System.nanoTime() - t0) / 1e9
         t0 = System.nanoTime()
         Dsir.importanceWeights(c, "text", ratiosXx, 8192,
@@ -1713,7 +1709,6 @@ object ScaleSmoke {
         println(f"[scale-smoke] dsir k=$k%-2d n=$n%-6d " +
           f"fitXx=$fitXx%5.2f s  weighXx=$weighXx%5.2f s  " +
           f"(md5 fit=$fitS%5.2f weigh=$weighS%5.2f)")
-        ratiosXx.unpersist()
         c.unpersist()
         spark.catalog.clearCache()
       }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dsir
+import graft.operators.{CurationHof, Dsir}
 import org.apache.spark.sql.functions._
 
 class DsirSpec extends SparkTestBase {
@@ -194,5 +194,51 @@ class DsirSpec extends SparkTestBase {
       Dsir.resampleGumbel(df.withColumn("id", lit(1L))
         .withColumn("w", lit(0.0)), "id", "w", n = 0)
     }
+  }
+
+  // ---- driver-side fit vs the distributed column-math spec ---------
+
+  private def bits(df: org.apache.spark.sql.DataFrame, c: String) =
+    df.select($"bucket", col(c).cast("double")).collect()
+      .map(r => r.getLong(0) ->
+        java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+
+  // disjoint vocabularies, m large enough that each side leaves
+  // buckets the other side fills
+  private lazy val fitTarget = (0 until 12)
+    .map(i => s"the cat sat on mat$i the cat").toDF("text")
+  private lazy val fitRaw = ((0 until 20)
+    .map(i => s"zig zag zork quux n${i % 7} zig") :+ null.asInstanceOf[String])
+    .toDF("text")
+
+  test("logRatioTable == distributed fit bit for bit: both hash " +
+    "families, zero-count buckets on either side, alpha != 1") {
+    for (hash <- Seq("md5", "xxhash64")) {
+      val t = bits(Dsir.hashedNgramCounts(fitTarget, "text", m, hash), "cnt")
+      val r = bits(Dsir.hashedNgramCounts(fitRaw, "text", m, hash), "cnt")
+      assert(t == bits(CurationHof.hashedNgramCountsHof(fitTarget, "text",
+        m, hash), "cnt"))
+      assert(r == bits(CurationHof.hashedNgramCountsHof(fitRaw, "text",
+        m, hash), "cnt"))
+      val zero = java.lang.Double.doubleToRawLongBits(0.0)
+      assert((0L until m).exists(b => t(b) == zero && r(b) != zero))
+      assert((0L until m).exists(b => t(b) != zero && r(b) == zero))
+      for (alpha <- Seq(1.0, 0.37, 2.5)) {
+        val got = bits(Dsir.logRatioTable(fitTarget, fitRaw, "text", m,
+          alpha, hash), "log_ratio")
+        val want = bits(CurationHof.logRatioTableHof(fitTarget, fitRaw,
+          "text", m, alpha, hash), "log_ratio")
+        assert(got.size == m && got == want, s"hash=$hash alpha=$alpha")
+      }
+    }
+  }
+
+  test("job pin: logRatioTable + importanceWeights run 4 jobs " +
+    "under default AQE") {
+    val n = jobsDuring {
+      val ratios = Dsir.logRatioTable(fitTarget, fitRaw, "text", m)
+      Dsir.importanceWeights(fitRaw, "text", ratios, m).collect()
+    }
+    assert(n == 4, s"dsir fit + weighting ran $n jobs")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.LangId
+import graft.operators.{CurationHof, LangId}
 
 /** Language identification (r17) — held-out accuracy on separable
   * planted languages, null/empty handling, the char-gram multiset,
@@ -175,5 +175,57 @@ class LangIdSpec extends SparkTestBase {
     val plan = LangId.classify(labeled, "text", model, m = 512)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"))
+  }
+
+  // ---- driver-side train vs the distributed column-math spec -------
+
+  private def modelRows(df: org.apache.spark.sql.DataFrame) =
+    df.select($"lang", $"bucket", $"log_prob", $"__fmt", $"__m",
+        $"__nmin", $"__nmax").collect()
+      .map(r => (r.getString(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+        r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6)))
+      .toSeq.sorted
+
+  test("train == distributed fit bit for bit: four languages, null " +
+    "text and null lang ignored, floor rows and stamps") {
+    val fourLangs = labeled.select($"lang", $"text")
+      .union(Seq(("it", "il gatto nero dorme sul divano"),
+        ("it", "la volpe veloce salta sopra il cane"),
+        ("en", null.asInstanceOf[String]),
+        (null.asInstanceOf[String], "orphan text with no language"))
+        .toDF("lang", "text"))
+    for ((mm, alpha, nMin, nMax) <- Seq((512, 1.0, 2, 3),
+        (64, 0.25, 1, 4))) {
+      val got = modelRows(LangId.train(fourLangs, "text", "lang", mm,
+        alpha, nMin, nMax))
+      assert(got == modelRows(CurationHof.langIdTrainHof(fourLangs,
+        "text", "lang", mm, alpha, nMin, nMax)), s"m=$mm alpha=$alpha")
+      assert(got.filter(_._2 == -1L).map(_._1) ==
+        Seq("de", "en", "fr", "it"))
+      assert(got.forall(r => r._4 == 1 && r._5 == mm && r._6 == nMin &&
+        r._7 == nMax))
+    }
+  }
+
+  test("train refuses a model classify could not serve, with " +
+    "classify's message") {
+    val fiveLangs = Seq("a", "b", "c", "d", "e")
+      .map(l => (l, s"text of $l")).toDF("lang", "text")
+    // 5 langs x 2^20 buckets > MaxServedCells (2^22)
+    val e = intercept[IllegalArgumentException] {
+      LangId.train(fiveLangs, "text", "lang", m = LangId.MaxBuckets)
+    }
+    assert(e.getMessage.contains("too large to serve as literals: 5 " +
+      "langs"), e.getMessage)
+  }
+
+  test("job pin: train + classify run 2 jobs under default " +
+    "AQE") {
+    val n = jobsDuring {
+      val mdl = LangId.train(labeled, "text", "lang", m = 512)
+      LangId.classify(labeled, "text", mdl, m = 512).collect()
+    }
+    assert(n == 2, s"langid train + classify ran $n jobs")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.SemDedup
+import graft.operators.{CurationHof, SemDedup}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SemDedupSpec extends SparkTestBase {
@@ -422,5 +423,129 @@ class SemDedupSpec extends SparkTestBase {
       .select($"id", $"cluster").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got == flat && got.size == 2)
+  }
+
+  // ---- per-cluster verification kernel vs the join-back spec -------
+
+  test("an id copied into two clusters never pairs across them " +
+    "(the join-back leak): recall is 0 across the boundary") {
+    // 50 sits in cluster 0 AND cluster 1; 51 sits in cluster 0 and is
+    // a near-dup only of 50's cluster-1 copy
+    val df = Seq(
+      (50L, vec(1.0, 0.0, 0.0)),     // cluster 0
+      (50L, vec(0.49, 0.51, 0.0)),   // cluster 1
+      (51L, vec(0.51, 0.49, 0.0))    // cluster 0
+    ).toDF("id", "v")
+    assert(SemDedup.semDedupPairs(df, "id", "v", centers, 0.99)
+      .count() == 0)
+    val kept = SemDedup.semDedup(df, "id", "v", centers, 0.99)
+      .select($"id").as[Long].collect().toSeq.sorted
+    assert(kept == Seq(50L, 50L, 51L))
+    // the replaced id join-back paired 51 with the cluster-1 copy of
+    // 50 and labelled the pair cluster 1, so 51 was dropped
+    val leaked = CurationHof.semDedupPairsHof(df, "id", "v", centers, 0.99)
+      .select($"id_a", $"id_b", $"cluster").as[(Long, Long, Int)]
+      .collect().toSeq
+    assert(leaked == Seq((50L, 51L, 1)))
+  }
+
+  /** dim-6 rows scattered around four of six axis centers, with a
+    * planted near-copy for every fifth row (ids unique) */
+  private lazy val kernelCenters: Seq[Seq[Double]] =
+    Seq.tabulate(4)(c => Seq.tabulate(6)(j => if (j == c) 1.0 else 0.0))
+  private lazy val kernelRows: Seq[(Long, Array[Double])] = {
+    val rnd = new scala.util.Random(11)
+    val base = (0 until 80).map { i =>
+      val v = Array.tabulate(6)(j =>
+        (if (j == i % 4) 1.0 else 0.0) + 0.3 * rnd.nextGaussian())
+      (i.toLong, v)
+    }
+    base ++ base.filter(_._1 % 5 == 0).map { case (i, v) =>
+      (i + 1000L, v.map(_ + 0.01 * rnd.nextGaussian())) }
+  }
+
+  /** pair rows as a multiset with every double bit-exact */
+  private def pairRows(p: DataFrame): Seq[(String, String, Int, Long, Long, Long)] =
+    p.select($"id_a".cast("string"), $"id_b".cast("string"), $"cluster",
+        $"cosine", $"cent_cos_a", $"cent_cos_b").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(4)),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(5))))
+      .toSeq.sorted
+
+  test("semDedupPairs == join-back spec bit for bit: flat and routed, " +
+    "a cosine exactly at minCosine, the maxClusterSize cap") {
+    val df = kernelRows.toDF("id", "v")
+    val all = pairRows(SemDedup.semDedupPairs(df, "id", "v",
+      kernelCenters, minCosine = -1.0))
+    assert(all.size > 500, s"fixture too sparse: ${all.size} pairs")
+    assert(all == pairRows(CurationHof.semDedupPairsHof(df, "id", "v",
+      kernelCenters, minCosine = -1.0)))
+    // the threshold lands exactly on a real pair's cosine: it must
+    // survive `>=` on both paths
+    val atBits = all.map(_._4).sorted.apply(all.size / 2)
+    val at = java.lang.Double.longBitsToDouble(atBits)
+    for ((nProbe, nCells) <- Seq((0, 0), (0, 2), (1, 2))) {
+      val got = pairRows(SemDedup.semDedupPairs(df, "id", "v",
+        kernelCenters, at, nProbe = nProbe, nCells = nCells))
+      assert(got.exists(_._4 == atBits), s"routing ($nProbe, $nCells)")
+      assert(got == pairRows(CurationHof.semDedupPairsHof(df, "id", "v",
+        kernelCenters, at, nProbe = nProbe, nCells = nCells)),
+        s"routing ($nProbe, $nCells) diverged from the join-back spec")
+    }
+    // the cap refuses some clusters and admits others identically
+    val sizes = SemDedup.clusterSizes(df, "v", kernelCenters)
+      .collect().map(_.getLong(1).toInt).sorted
+    val cap = sizes(1)
+    val capped = pairRows(SemDedup.semDedupPairs(df, "id", "v",
+      kernelCenters, 0.5, maxClusterSize = cap))
+    assert(capped.nonEmpty && capped.map(_._3).distinct.size < 4)
+    assert(capped == pairRows(CurationHof.semDedupPairsHof(df, "id", "v",
+      kernelCenters, 0.5, maxClusterSize = cap)))
+  }
+
+  test("semDedupPairs == join-back spec for string ids over float " +
+    "vectors, and for id copies inside one cluster") {
+    val strDf = kernelRows.map { case (i, v) =>
+      (f"d$i%05d", v.map(_.toFloat)) }.toDF("id", "v")
+    assert(pairRows(SemDedup.semDedupPairs(strDf, "id", "v",
+        kernelCenters, 0.8)) ==
+      pairRows(CurationHof.semDedupPairsHof(strDf, "id", "v",
+        kernelCenters, 0.8)))
+    // copies of one id (identical and differing vectors) in the same
+    // cluster: every copy pairs with every other id, never with itself
+    val e0 = Array(1.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+    val dups = kernelRows ++ Seq(
+      (3000L, e0), (3000L, e0),
+      (3001L, e0.updated(1, 0.02)), (3001L, e0.updated(1, 0.03)),
+      (3002L, e0.updated(2, 0.01)))
+    val dupDf = dups.toDF("id", "v")
+    val got = pairRows(SemDedup.semDedupPairs(dupDf, "id", "v",
+      kernelCenters, 0.99))
+    assert(got.count(p => p._1 == "3000" && p._2 == "3001") == 4)
+    assert(!got.exists(p => p._1 == p._2))
+    assert(got == pairRows(CurationHof.semDedupPairsHof(dupDf, "id", "v",
+      kernelCenters, 0.99)))
+  }
+
+  test("semDedup survivors == join-back spec under both keep policies") {
+    val df = kernelRows.toDF("id", "v")
+    for (keep <- Seq("min_id", "centroid"); cos <- Seq(0.9, 0.99)) {
+      val got = SemDedup.semDedup(df, "id", "v", kernelCenters, cos,
+        keep = keep).select($"id").as[Long].collect().toSeq.sorted
+      val want = CurationHof.semDedupHof(df, "id", "v", kernelCenters,
+        cos, keep = keep).select($"id").as[Long].collect().toSeq.sorted
+      assert(got == want, s"keep=$keep minCosine=$cos")
+      assert(got.size < kernelRows.size, s"keep=$keep: nothing dropped")
+    }
+  }
+
+  test("job pin: semDedup runs 9 jobs under default AQE") {
+    val df = kernelRows.toDF("id", "v")
+    val n = jobsDuring {
+      SemDedup.semDedup(df, "id", "v", kernelCenters, 0.99).collect()
+    }
+    assert(n == 9, s"semDedup ran $n jobs")
   }
 }
